@@ -1086,12 +1086,13 @@ GRAPH_QUERIES: dict[str, tuple[str, str]] = {
         ORDER BY lbl, nk, rk
         """),
 
-    # additive algo.SSSP (sssp.py): bounded-hop weighted Bellman-Ford
-    # from Customer 1 over ALL relations, weight = l_quantity where
-    # present else 1.0, ≤3 hops. The oracle enumerates every ≤3-hop
-    # path over the id-formula edge list and takes min(distance, hops)
-    # per node — identical float arithmetic (each distance is an exact
-    # hop-ordered path sum on both engines).
+    # additive algo.SSSP (sssp.py::sssp_call — the literal source runs
+    # sssp_multi on a one-row roots frame): bounded-hop weighted
+    # Bellman-Ford from Customer 1 over ALL relations, weight =
+    # l_quantity where present else 1.0, ≤3 hops. The oracle enumerates
+    # every ≤3-hop path over the id-formula edge list and takes
+    # min(distance, hops) per node — identical float arithmetic (each
+    # distance is an exact hop-ordered path sum on both engines).
     "q_sssp": (
         "CALL algo.SSSP(3000000000001, null, 'l_quantity', 3) "
         "YIELD node, distance, hops "
@@ -1132,7 +1133,8 @@ GRAPH_QUERIES: dict[str, tuple[str, str]] = {
         """),
 
     # correlated SSSP (r8): per-row bound sources plan as ONE keyed
-    # multi-source Bellman-Ford (sssp.py::sssp_multi — the vectorized
+    # multi-source Bellman-Ford (sssp.py::sssp_call → sssp_multi, the
+    # path the literal-source form also takes — the vectorized
     # algo.BFS shape, never a driver loop). Every Nation < 5 reaches
     # itself at 0 and its region at 1 over IN_REGION.
     "q_sssp_correlated": (
@@ -2156,7 +2158,7 @@ def _q_pagerank(spark, sf_dir):
 
 def _q_ppr(spark, sf_dir):
     """Personalized PageRank from Nation 3 over IN_REGION
-    (pagerank.py::_pagerank_personalized): restart distribution
+    (pagerank.py::pagerank with ``restart_ids``): restart distribution
     uniform over the source set; verifies teleport localization,
     dangling-mass personalization and the 20-iteration recurrence."""
     g = _graph(spark, sf_dir)

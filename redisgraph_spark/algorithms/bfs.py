@@ -14,9 +14,12 @@ Records whose source reaches nothing emit no row (step returns NULL when
 
 Spark shape: breadth-synchronous frontier joins keyed by BFS root, so one
 CALL with many input records is ONE distributed multi-source BFS — each
-hop is a single equi-join + anti-join against the visited set, with
-``localCheckpoint`` cutting lineage. The per-node parent edge is the
-min-edge-id discovery (deterministic under Spark's unordered execution).
+hop is a single equi-join + anti-join against the visited set, run as
+one superstep (q_bfs at sf0.1, local[4]: four Spark jobs per level,
+among them the lineage cut and the empty-frontier probe). The per-node
+parent edge is
+the min-edge-id discovery (deterministic under Spark's unordered
+execution).
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from redisgraph_spark.algorithms import superstep
 from redisgraph_spark.cypher import ast as A
 
 # edge-count bound exists via visited-set monotonicity; this caps runaway
@@ -35,6 +39,8 @@ def bfs_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
     """Plan ``CALL algo.BFS`` against the current context; returns the new
     context DataFrame (input records inner-joined with yields) and the
     default yield column names."""
+    from redisgraph_spark.functions.procedures import (
+        attach_roots, source_roots, yield_nodes)
     from redisgraph_spark.planner.planner import PlanError
 
     if len(clause.args) != 3:
@@ -59,55 +65,39 @@ def bfs_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
         F.col("_src").alias("__p"), F.col("_dst").alias("__c"),
         F.col("_id").alias("__e"))
 
-    roots = ctx.df.select(F.col(f"{src_e.name}._id").alias("__root")) \
-        .dropDuplicates().localCheckpoint(eager=True)
+    roots, key = source_roots(planner, ctx, clause, "algo.BFS",
+                              many=False)
 
-    # visited: (root, nid); tree: (root, nid, eid) — the discovery edge
-    visited = roots.select("__root", F.col("__root").alias("__nid"))
-    frontier = visited
-    tree: DataFrame | None = None
-    max_levels = depth if depth > 0 else MAX_LEVELS
-    for _ in range(max_levels):
-        nxt = frontier.join(
-            edges, frontier["__nid"] == edges["__p"], "inner") \
-            .select("__root", F.col("__c").alias("__nid"), "__e")
-        nxt = nxt.join(visited, ["__root", "__nid"], "left_anti")
+    def step(visited: DataFrame, lvl: int) -> DataFrame:
+        nxt = visited.filter(F.col("__lvl") == lvl - 1) \
+            .select("__root", "__nid") \
+            .join(edges, F.col("__nid") == edges["__p"], "inner") \
+            .select("__root", F.col("__c").alias("__nid"), "__e") \
+            .join(visited, ["__root", "__nid"], "left_anti")
         # one discovery edge per (root, node): min edge id
-        nxt = nxt.groupBy("__root", "__nid").agg(F.min("__e").alias("__e"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        tree = nxt if tree is None else tree.unionByName(nxt)
-        visited = visited.unionByName(nxt.select("__root", "__nid")) \
-            .localCheckpoint(eager=True)
-        frontier = nxt.select("__root", "__nid")
-    else:
-        if depth <= 0:
-            # "unlimited" BFS (reference proc_bfs.c) hit the safety cap
-            # with a live frontier — say so instead of silently
-            # truncating the reachable set
-            import warnings
-            warnings.warn(
-                f"algo.BFS(depth=0) stopped at {MAX_LEVELS} levels "
-                "with a live frontier; deeper nodes are not reported",
-                RuntimeWarning, stacklevel=2)
+        return visited.unionByName(
+            nxt.groupBy("__root", "__nid").agg(F.min("__e").alias("__e"))
+            .withColumn("__lvl", F.lit(lvl)))
 
-    node_flat = g.nodes(None)
-    node_struct = F.struct(*[F.col(c) for c in node_flat.columns])
+    # visited: (root, nid, discovery edge eid, level); roots at level 0
+    visited = roots.select("__root", F.col("__root").alias("__nid"),
+                           F.lit(None).cast("long").alias("__e"),
+                           F.lit(0).alias("__lvl"))
+    res = superstep.run(
+        visited, step, depth if depth > 0 else MAX_LEVELS,
+        superstep.frontier_empty(
+            lambda v, lvl: v.filter(F.col("__lvl") == lvl)))
+    if depth <= 0:
+        # "unlimited" BFS (reference proc_bfs.c) hit the safety cap
+        # with a live frontier — say so instead of silently
+        # truncating the reachable set
+        superstep.warn_capped(res, "algo.BFS(depth=0)",
+                              "deeper nodes are not reported")
+    tree = res.state.filter(F.col("__lvl") > 0)
+
     edge_struct = F.struct(*[F.col(c) for c in edges_flat.columns])
-
-    if tree is None:
-        # nothing reachable from any source: empty tree with the right
-        # schema keeps the inner-join semantics (zero output rows) and
-        # the yield column types identical to the populated case
-        tree = roots.limit(0).select(
-            "__root", F.col("__root").alias("__nid"),
-            F.col("__root").alias("__e"))
-
-    enriched = tree \
-        .join(node_flat.select(F.col("_id").alias("__nid"),
-                               node_struct.alias("__node")),
-              "__nid", "inner") \
+    enriched = yield_nodes(tree.withColumn("__node", F.col("__nid")),
+                           g.nodes(None), "__node", "__node") \
         .join(edges_flat.select(F.col("_id").alias("__e"),
                                 edge_struct.alias("__edge")),
               "__e", "inner")
@@ -120,7 +110,4 @@ def bfs_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
         F.transform("__res", lambda x: x["__node"]).alias("nodes"),
         F.transform("__res", lambda x: x["__edge"]).alias("edges"))
 
-    out = ctx.df.join(
-        packed, F.col(f"{src_e.name}._id") == packed["__root"], "inner") \
-        .drop("__root")
-    return out, ["nodes", "edges"]
+    return attach_roots(ctx, key, packed), ["nodes", "edges"]

@@ -17,13 +17,18 @@ Scale shape: the BFS frontier is keyed by (root, node) — one
 equi-join + one anti-join against the visited set per hop, all
 roots advanced together (the same one-join-per-level shape as
 ``algorithms/bfs.py``); the final centrality is one root-keyed
-aggregation. Nothing driver-side.
+aggregation. Nothing driver-side. At sf0.1, local[4]: three Spark jobs
+per hop for q_closeness, among them the superstep's lineage cut and its
+empty-frontier probe; q_betweenness runs 3-4 per forward level and 6
+per backward level.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from redisgraph_spark.algorithms import superstep
 
 MAX_HOPS = 16
 
@@ -35,35 +40,23 @@ def closeness(edges: DataFrame, source_ids, max_hops: int = MAX_HOPS,
     stay distributed, never collected).  Returns one row per source:
     ``(node, reached, closeness, harmonic)`` — reached/centralities
     over nodes at directed distance 1..max_hops, grid-rounded."""
-    spark = edges.sparkSession
-    e = edges.select(F.col("_src").alias("__u"),
-                     F.col("_dst").alias("__v")).distinct() \
-        .localCheckpoint(eager=True)
-    if isinstance(source_ids, DataFrame):
-        roots = source_ids.select(
-            F.col(source_ids.columns[0]).cast("long").alias("__root")) \
-            .filter(F.col("__root").isNotNull()) \
-            .dropDuplicates().localCheckpoint(eager=True)
-    else:
-        roots = spark.createDataFrame(
-            [(int(i),) for i in source_ids],
-            "__root long").dropDuplicates() \
-            .localCheckpoint(eager=True)
-    visited = roots.select("__root", F.col("__root").alias("__nid"),
-                           F.lit(0).alias("__d"))
-    frontier = visited
-    for depth in range(1, max_hops + 1):
-        nxt = frontier.join(e, frontier["__nid"] == e["__u"]) \
+    e = superstep.cut(edges.select(F.col("_src").alias("__u"),
+                                   F.col("_dst").alias("__v")).distinct())
+    roots = _roots(edges, source_ids)
+
+    def step(visited: DataFrame, depth: int) -> DataFrame:
+        return visited.unionByName(
+            visited.filter(F.col("__d") == depth - 1)
+            .join(e, F.col("__nid") == e["__u"])
             .select("__root", F.col("__v").alias("__nid"),
-                    F.lit(depth).alias("__d")) \
-            .dropDuplicates(["__root", "__nid"]) \
-            .join(visited.select("__root", "__nid"),
-                  ["__root", "__nid"], "left_anti") \
-            .localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+                    F.lit(depth).alias("__d"))
+            .dropDuplicates(["__root", "__nid"])
+            .join(visited, ["__root", "__nid"], "left_anti"))
+
+    visited = superstep.run(
+        roots.select("__root", F.col("__root").alias("__nid"),
+                     F.lit(0).alias("__d")),
+        step, max_hops, _level_empty).state
     stats = visited.filter(F.col("__d") > 0).groupBy("__root").agg(
         F.count(F.lit(1)).alias("reached"),
         F.sum("__d").alias("__sumd"),
@@ -83,51 +76,56 @@ def closeness(edges: DataFrame, source_ids, max_hops: int = MAX_HOPS,
         .alias("harmonic"))
 
 
-def closeness_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
-    """Correlated ``CALL algo.closeness(n[, reltype[, maxHops]])`` with
-    a bound node-variable source: the per-row sources feed ONE
-    (root, node)-keyed multi-source BFS, joined back on the source id
-    — no driver loop (same vectorized shape as algo.BFS/algo.SSSP;
-    reference ProcedureCall is per-record, op_procedure_call.c)."""
-    from pyspark.sql import functions as F
+def _roots(edges: DataFrame, source_ids) -> DataFrame:
+    """Distinct ``__root`` ids from a list, or from a one-column
+    DataFrame (the CALL path — sources stay distributed, never
+    collected)."""
+    if isinstance(source_ids, DataFrame):
+        return source_ids.select(
+            F.col(source_ids.columns[0]).cast("long").alias("__root")) \
+            .filter(F.col("__root").isNotNull()).dropDuplicates()
+    return edges.sparkSession.createDataFrame(
+        [(int(i),) for i in source_ids], "__root long").dropDuplicates()
 
-    from redisgraph_spark.cypher import ast as A
+
+# BFS level ``depth`` (column ``__d``) came out empty: every root's
+# reachable set is complete
+_level_empty = superstep.frontier_empty(
+    lambda visited, depth: visited.filter(F.col("__d") == depth))
+
+
+def closeness_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
+    """``CALL algo.closeness(sources[, reltype[, maxHops]])``. Sources
+    are a bound node variable (correlated: the per-row sources feed ONE
+    (root, node)-keyed multi-source BFS, joined back on the source id —
+    no driver loop; reference ProcedureCall is per-record,
+    op_procedure_call.c) or a literal source-id list."""
+    from redisgraph_spark.functions.procedures import (
+        arg_value, attach_roots, source_roots, yield_nodes)
     from redisgraph_spark.planner.planner import PlanError
 
-    src_e = clause.args[0]
-
-    def _lit(e, what):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise PlanError(f"algo.closeness {what} must be a literal or "
-                        f"parameter")
-
-    rel = _lit(clause.args[1], "reltype") if len(clause.args) > 1 \
-        else None
-    hops = _lit(clause.args[2], "max hops") if len(clause.args) > 2 \
-        else MAX_HOPS
-    if rel is not None and not isinstance(rel, str):
-        raise PlanError("algo.closeness reltype must be a string")
-    if not isinstance(hops, int) or isinstance(hops, bool) or hops < 1:
-        raise PlanError("algo.closeness max hops must be a positive "
-                        "int")
+    roots, key = source_roots(planner, ctx, clause, "algo.closeness",
+                              many=True)
+    rel, hops = None, MAX_HOPS
+    for a in clause.args[1:]:
+        val = arg_value(planner, a, "algo.closeness options")
+        if isinstance(val, str):
+            rel = val
+        elif isinstance(val, int) and not isinstance(val, bool):
+            hops = val
+        elif val is not None:
+            raise PlanError(
+                "algo.closeness: options are an optional relation-type "
+                "string and an optional int max hop count")
+    if hops < 1:
+        raise PlanError("algo.closeness max hops must be >= 1")
     g = planner.graph
-    roots = ctx.df.select(F.col(f"{src_e.name}._id").alias("__root"))
     cl = closeness(g.edges([rel] if rel else None)
                    .select("_src", "_dst"), roots, max_hops=hops)
-    nodes = g.nodes(None)
-    node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-    enriched = cl.withColumnRenamed("node", "__cl_id") \
-        .join(nodes, F.col("__cl_id") == nodes["_id"]) \
-        .select(F.col("__cl_id"), node_struct.alias("node"),
-                "reached", "closeness", "harmonic")
-    out = ctx.df.join(
-        enriched,
-        F.col(f"{src_e.name}._id") == enriched["__cl_id"], "inner") \
-        .drop("__cl_id")
-    return out, ["node", "reached", "closeness", "harmonic"]
+    out = yield_nodes(cl.withColumn("__root", F.col("node")),
+                      g.nodes(None))
+    return attach_roots(ctx, key, out), \
+        ["node", "reached", "closeness", "harmonic"]
 
 
 def betweenness(edges: DataFrame, source_ids: list[int] | None = None,
@@ -156,78 +154,69 @@ def betweenness(edges: DataFrame, source_ids: list[int] | None = None,
     Returns ``(node, score)`` for every non-root-only node reached,
     grid-rounded for cross-engine determinism.
     """
-    spark = edges.sparkSession
     e = edges.select(F.col("_src").alias("__u"),
                      F.col("_dst").alias("__v"))
     if not directed:
         e = e.unionByName(e.select(F.col("__v").alias("__u"),
                                    F.col("__u").alias("__v")))
-    e = e.filter(F.col("__u") != F.col("__v")).distinct() \
-        .localCheckpoint(eager=True)
+    e = superstep.cut(e.filter(F.col("__u") != F.col("__v")).distinct())
     if source_ids is None:
-        roots = e.select(F.col("__u").alias("__root")) \
-            .unionByName(e.select(F.col("__v").alias("__root"))) \
-            .dropDuplicates()
-    else:
-        roots = spark.createDataFrame(
-            [(int(i),) for i in source_ids], "__root long") \
-            .dropDuplicates()
-    roots = roots.localCheckpoint(eager=True)
-    visited = roots.select(
-        "__root", F.col("__root").alias("__nid"),
-        F.lit(0).alias("__d"), F.lit(1.0).alias("__sigma")) \
-        .localCheckpoint(eager=True)
-    frontier = visited
-    deepest = 0
-    for depth in range(1, max_hops + 1):
-        nxt = frontier.join(e, frontier["__nid"] == e["__u"]) \
-            .select("__root", F.col("__v").alias("__nid"), "__sigma") \
-            .join(visited.select("__root", "__nid"),
-                  ["__root", "__nid"], "left_anti") \
-            .groupBy("__root", "__nid") \
-            .agg(F.sum("__sigma").alias("__sigma")) \
+        source_ids = e.select(F.col("__u").alias("__root")) \
+            .unionByName(e.select(F.col("__v").alias("__root")))
+    roots = superstep.cut(_roots(e, source_ids))
+
+    def forward(visited: DataFrame, depth: int) -> DataFrame:
+        return visited.unionByName(
+            visited.filter(F.col("__d") == depth - 1)
+            .join(e, F.col("__nid") == e["__u"])
+            .select("__root", F.col("__v").alias("__nid"), "__sigma")
+            .join(visited, ["__root", "__nid"], "left_anti")
+            .groupBy("__root", "__nid")
+            .agg(F.sum("__sigma").alias("__sigma"))
             .select("__root", "__nid", F.lit(depth).alias("__d"),
-                    "__sigma") \
-            .localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        deepest = depth
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    # backward dependency accumulation (nothing to do with depth-0-only
-    # BFS trees: no intermediates exist)
-    contributions = []
-    delta_below = visited.filter(F.col("__d") == deepest).select(
-        "__root", "__nid", "__sigma", F.lit(0.0).alias("__delta"))
-    for d in range(deepest - 1, 0, -1):
+                    "__sigma"))
+
+    fwd = superstep.run(
+        roots.select("__root", F.col("__root").alias("__nid"),
+                     F.lit(0).alias("__d"), F.lit(1.0).alias("__sigma")),
+        forward, max_hops, _level_empty)
+    visited = fwd.state
+    # the deepest non-empty BFS level
+    deepest = fwd.rounds - 1 if fwd.converged else fwd.rounds
+
+    def backward(below: DataFrame, rnd: int) -> DataFrame:
+        # one level per superstep, deepest first; ``below`` holds every
+        # level under d with its dependency δ (the deepest level's is 0)
+        d = deepest - rnd
+        lower = below.filter(F.col("__d") == d + 1)
         cur = visited.filter(F.col("__d") == d)
         down = cur.select(F.col("__root").alias("__r"),
                           F.col("__nid").alias("__a"),
                           F.col("__sigma").alias("__sa")) \
             .join(e, F.col("__a") == e["__u"]) \
-            .join(delta_below,
-                  (F.col("__r") == delta_below["__root"])
-                  & (e["__v"] == delta_below["__nid"])) \
+            .join(lower,
+                  (F.col("__r") == lower["__root"])
+                  & (e["__v"] == lower["__nid"])) \
             .groupBy(F.col("__r"), F.col("__a")) \
             .agg(F.sum(F.col("__sa") / F.col("__sigma")
                        * (F.lit(1.0) + F.col("__delta"))).alias("__dl"))
-        delta_below = cur.join(
+        return below.unionByName(cur.join(
             down, (cur["__root"] == down["__r"])
-            & (cur["__nid"] == down["__a"]), "left") \
-            .select("__root", "__nid", "__sigma",
+            & (cur["__nid"] == down["__a"]), "left")
+            .select("__root", "__nid", "__d", "__sigma",
                     F.coalesce(F.col("__dl"), F.lit(0.0))
-                    .alias("__delta")) \
-            .localCheckpoint(eager=True)
-        contributions.append(
-            delta_below.select("__nid", "__delta"))
-    if not contributions:
-        return roots.select(F.col("__root").alias("node")).limit(0) \
-            .select("node", F.lit(0.0).alias("score"))
-    allc = contributions[0]
-    for c in contributions[1:]:
-        allc = allc.unionByName(c)
+                    .alias("__delta")))
+
+    # backward dependency accumulation (nothing to do with depth-0-only
+    # BFS trees: no intermediates exist)
+    deltas = superstep.run(
+        visited.filter(F.col("__d") == deepest)
+        .withColumn("__delta", F.lit(0.0)),
+        backward, max(deepest - 1, 0)).state
+    contributions = deltas.filter(
+        (F.col("__d") > 0) & (F.col("__d") < deepest))
     half = 2.0 if not directed else 1.0
-    return allc.groupBy(F.col("__nid").alias("node")).agg(
+    return contributions.groupBy(F.col("__nid").alias("node")).agg(
         (F.round(F.sum("__delta") / half * grid) / grid).alias("score"))
 
 

@@ -12,7 +12,8 @@ Scale notes:
   the 100 TB upgrades; at our SFs plain propagation converges in a
   handful of rounds. Convergence is detected with a 1-row aggregate
   (sum of component ids — strictly decreasing until fixpoint), not a
-  row-diff join.
+  row-diff join. At sf0.1, local[4] (q_wcc): three Spark jobs per round,
+  among them the superstep's lineage cut and that aggregate.
 - Triangle counting joins the canonically-oriented (a < b) edge set
   three ways; Spark broadcasts/shuffles as sizes dictate. Degenerate
   multi-edges and self-loops are removed up front.
@@ -22,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from redisgraph_spark.algorithms import superstep
+
 _MAX_ITER = 64
 
 
@@ -30,36 +33,38 @@ def weakly_connected_components(node_ids: DataFrame,
                                 max_iter: int = _MAX_ITER) -> DataFrame:
     """``node_ids``: one ``_id`` column; ``edges``: ``_src``/``_dst``.
     Returns ``(node, component)`` where component = min reachable id."""
-    sym = edges.select(F.col("_src").alias("a"), F.col("_dst").alias("b")) \
-        .union(edges.select(F.col("_dst").alias("a"),
-                            F.col("_src").alias("b"))) \
-        .filter(F.col("a") != F.col("b")).distinct() \
-        .localCheckpoint(eager=True)
-    comp = node_ids.select(F.col("_id").alias("node"),
-                           F.col("_id").alias("comp")) \
-        .localCheckpoint(eager=True)
-    prev_sum = None
-    for _ in range(max_iter):
+    sym = _symmetric(edges)
+
+    def step(comp: DataFrame, _rnd: int) -> DataFrame:
         nbr = sym.join(comp, sym["b"] == comp["node"]) \
             .groupBy("a").agg(F.min("comp").alias("ncomp"))
-        comp = comp.join(nbr, comp["node"] == nbr["a"], "left") \
+        return comp.join(nbr, comp["node"] == nbr["a"], "left") \
             .select(F.col("node"),
                     F.least(F.col("comp"),
                             F.coalesce(F.col("ncomp"), F.col("comp")))
-                    .alias("comp")) \
-            .localCheckpoint(eager=True)
-        s = comp.agg(F.sum("comp").alias("s")).collect()[0]["s"]
-        if s == prev_sum:  # min-propagation is monotone: equal ⇒ fixpoint
-            break
-        prev_sum = s
-    else:
-        import warnings
-        warnings.warn(
-            f"weakly_connected_components: no fixpoint after {max_iter} "
-            "rounds (graph diameter exceeds max_iter) — components may "
-            "be split; raise max_iter or use the star variant",
-            RuntimeWarning, stacklevel=2)
-    return comp.select(F.col("node"), F.col("comp").alias("component"))
+                    .alias("comp"))
+
+    # min-propagation is monotone: an equal component-id sum ⇒ fixpoint
+    res = superstep.run(
+        node_ids.select(F.col("_id").alias("node"),
+                        F.col("_id").alias("comp")),
+        step, max_iter, superstep.unchanged(F.sum("comp")))
+    superstep.warn_capped(
+        res, "weakly_connected_components",
+        "the graph diameter exceeds max_iter, so components may be "
+        "split; raise max_iter or use the star variant")
+    return res.state.select(F.col("node"),
+                            F.col("comp").alias("component"))
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Distinct directed (a, b) pairs for every non-loop edge, both
+    directions, cut once — the static message graph of WCC and k-core."""
+    return superstep.cut(
+        edges.select(F.col("_src").alias("a"), F.col("_dst").alias("b"))
+        .union(edges.select(F.col("_dst").alias("a"),
+                            F.col("_src").alias("b")))
+        .filter(F.col("a") != F.col("b")).distinct())
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -94,13 +99,7 @@ def weakly_connected_components_star(node_ids: DataFrame,
     (equal counts + empty difference — both sides are distinct sets).
     Returns (node, component) like
     :func:`weakly_connected_components`."""
-    e = edges.select(F.col("_src").alias("a"), F.col("_dst").alias("b")) \
-        .filter(F.col("a") != F.col("b")) \
-        .select(F.least("a", "b").alias("a"),
-                F.greatest("a", "b").alias("b")) \
-        .distinct().localCheckpoint(eager=True)
-    prev_e, prev_n = None, None
-    for _ in range(max_iter):
+    def step(e: DataFrame, _rnd: int) -> DataFrame:
         # ---- large-star: for each u over ALL neighbors, m = min(N(u)∪u);
         # emit (v, m) for strictly larger neighbors v
         sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")) \
@@ -122,24 +121,22 @@ def weakly_connected_components_star(node_ids: DataFrame,
             .select(F.col("v").alias("x"), F.col("m").alias("y")) \
             .unionAll(mins2.select(F.col("u").alias("x"),
                                    F.col("m").alias("y")))
-        e = ss.filter(F.col("x") != F.col("y")) \
-            .select(F.least("x", "y").alias("a"),
-                    F.greatest("x", "y").alias("b")) \
-            .distinct().localCheckpoint(eager=True)
-        # EXACT fixpoint test — both sides are distinct sets, so equal
-        # counts + empty difference ⇔ set equality (a (count, sum, sum)
-        # checksum can collide and exit early with wrong components)
-        n = e.count()
-        if prev_e is not None and n == prev_n \
-                and e.exceptAll(prev_e).isEmpty():
-            break
-        prev_e, prev_n = e, n
-    else:
-        import warnings
-        warnings.warn(
-            f"weakly_connected_components_star: no fixpoint after "
-            f"{max_iter} rounds — components may be split; raise "
-            "max_iter", RuntimeWarning, stacklevel=2)
+        return _canonical(ss.select(F.col("x").alias("a"),
+                                    F.col("y").alias("b")))
+
+    # EXACT fixpoint test — both sides are distinct sets, so equal
+    # counts + empty difference ⇔ set equality (a (count, sum, sum)
+    # checksum can collide and exit early with wrong components)
+    same_size = superstep.unchanged(F.count(F.lit(1)))
+    res = superstep.run(
+        superstep.cut(_canonical(edges.select(F.col("_src").alias("a"),
+                                              F.col("_dst").alias("b")))),
+        step, max_iter,
+        lambda new, old, rnd: same_size(new, old, rnd)
+        and new.exceptAll(old).isEmpty())
+    superstep.warn_capped(res, "weakly_connected_components_star",
+                          "components may be split; raise max_iter")
+    e = res.state
     # converged: e is a star per component (b → component-min a)
     parent = e.select(F.col("b").alias("node"),
                       F.col("a").alias("component")) \
@@ -148,6 +145,13 @@ def weakly_connected_components_star(node_ids: DataFrame,
         .join(parent, "node", "left_anti") \
         .select("node", F.col("node").alias("component"))
     return parent.unionByName(roots)
+
+
+def _canonical(pairs: DataFrame) -> DataFrame:
+    """Distinct undirected non-loop (a < b) edges."""
+    return pairs.filter(F.col("a") != F.col("b")) \
+        .select(F.least("a", "b").alias("a"),
+                F.greatest("a", "b").alias("b")).distinct()
 
 
 def label_propagation(node_ids: DataFrame, edges: DataFrame,
@@ -165,6 +169,8 @@ def label_propagation(node_ids: DataFrame, edges: DataFrame,
     argmax partitioned by node — two key shuffles over the edge list,
     same partitioning every round so AQE reuses exchanges. State is one
     (node, label) row per node; rounds are fixed, not data-dependent.
+    At sf0.1, local[4] (q_label_prop): 2-3 Spark jobs per round, one of
+    them the lineage cut.
 
     Returns (node, label).
     """
@@ -172,21 +178,23 @@ def label_propagation(node_ids: DataFrame, edges: DataFrame,
     ue = edges.select(F.col("_src").alias("a"), F.col("_dst").alias("b")) \
         .unionByName(edges.select(F.col("_dst").alias("a"),
                                   F.col("_src").alias("b")))
-    labels = node_ids.select(F.col("_id").alias("node"),
-                             F.col("_id").alias("label"))
     w = Window.partitionBy("a").orderBy(F.col("__c").desc(),
                                         F.col("label").asc())
-    for _ in range(iters):
+
+    def step(labels: DataFrame, _rnd: int) -> DataFrame:
         best = ue.join(labels, ue["b"] == labels["node"]) \
             .groupBy("a", "label").agg(F.count(F.lit(1)).alias("__c")) \
             .withColumn("__rn", F.row_number().over(w)) \
             .filter(F.col("__rn") == 1) \
             .select(F.col("a").alias("node"),
                     F.col("label").alias("__new"))
-        labels = labels.join(best, "node", "left") \
-            .select("node", F.coalesce("__new", "label").alias("label")) \
-            .localCheckpoint(eager=True)
-    return labels
+        return labels.join(best, "node", "left") \
+            .select("node", F.coalesce("__new", "label").alias("label"))
+
+    return superstep.run(
+        node_ids.select(F.col("_id").alias("node"),
+                        F.col("_id").alias("label")),
+        step, iters).state
 
 
 def k_core(edges: DataFrame, k: int,
@@ -202,38 +210,36 @@ def k_core(edges: DataFrame, k: int,
 
     Two modes:
     - ``iters=None`` (default): peel to fixpoint, detected by a 1-row
-      surviving-count aggregate (monotone decreasing ⇒ equality is a
-      fixpoint). Exact k-core.
+      surviving-edge count (monotone decreasing ⇒ equality is a
+      fixpoint). Exact k-core; a run that reaches ``max_iter`` rounds
+      first warns that its result is not the core.
     - fixed ``iters``: exactly that many synchronous peel rounds —
       rounds past the fixpoint are no-ops (peeling is idempotent once
       converged), so a fixed-round unrolled SQL oracle matches the
       exact result whenever it converges within ``iters``.
 
     Scale shape per round: one degree aggregation over the surviving
-    edge list (keyed shuffle) + one semi-join to shrink edges. Peeling
-    rounds are bounded by max_iter; edge list shrinks monotonically.
+    edge list (keyed shuffle) + one semi-join to shrink edges, cut once
+    (q_kcore at sf0.1, local[4]: three Spark jobs per fixed round, one
+    of them the cut; peeling to fixpoint adds the surviving-edge
+    count). Edge list shrinks monotonically.
     Self-loops are ignored (they contribute no peer support);
     parallel edges collapse via distinct.
 
     Returns (node,) — the members of the k-core.
     """
-    sym = edges.select(F.col("_src").alias("a"), F.col("_dst").alias("b")) \
-        .union(edges.select(F.col("_dst").alias("a"),
-                            F.col("_src").alias("b"))) \
-        .filter(F.col("a") != F.col("b")).distinct() \
-        .localCheckpoint(eager=True)
-    rounds = iters if iters is not None else max_iter
-    prev_n = None
-    for _ in range(rounds):
-        deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("__d"))
-        keep = deg.filter(F.col("__d") >= k).select("a") \
-            .localCheckpoint(eager=True)
-        sym = sym.join(keep, "a", "left_semi") \
-            .join(keep.withColumnRenamed("a", "b"), "b", "left_semi") \
-            .localCheckpoint(eager=True)
-        if iters is None:
-            n = keep.count()
-            if n == prev_n:
-                break
-            prev_n = n
-    return sym.select(F.col("a").alias("node")).distinct()
+    def step(sym: DataFrame, _rnd: int) -> DataFrame:
+        keep = sym.groupBy("a").agg(F.count(F.lit(1)).alias("__d")) \
+            .filter(F.col("__d") >= k).select("a")
+        return sym.join(keep, "a", "left_semi") \
+            .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
+
+    if iters is not None:
+        res = superstep.run(_symmetric(edges), step, iters)
+    else:
+        res = superstep.run(_symmetric(edges), step, max_iter,
+                            superstep.unchanged(F.count(F.lit(1))))
+        superstep.warn_capped(res, "k_core",
+                              "the result is not the k-core; raise "
+                              "max_iter")
+    return res.state.select(F.col("a").alias("node")).distinct()

@@ -19,13 +19,16 @@ Scale shape per iteration: two keyed aggregations over the edge list
 (one per direction) + two 1-row L2 norms folded into the lineage as
 broadcast crossJoins — the same two-shuffle loop as pageRank; state is
 one (node, score) row per endpoint. Nothing is collected to the driver
-mid-iteration; each round schedules exactly one job (the checkpoint).
+mid-iteration. At sf0.1, local[4] (q_hits), each round schedules nine
+Spark jobs, one of them the superstep's lineage cut.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from redisgraph_spark.algorithms import superstep
 
 
 def hits(edges: DataFrame, iters: int = 3,
@@ -36,52 +39,46 @@ def hits(edges: DataFrame, iters: int = 3,
     h ← Σ a over out-edges, both L2-normalized then grid-rounded).
     Nodes with no out-edges have hub 0; no in-edges, authority 0.
     """
-    e = edges.select(F.col("_src").alias("u"),
-                     F.col("_dst").alias("v")) \
-        .localCheckpoint(eager=True)
-    nodes = e.select(F.col("u").alias("node")) \
-        .union(e.select("v")).distinct() \
-        .localCheckpoint(eager=True)
-    scores = nodes.select(
-        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
+    e = superstep.cut(edges.select(F.col("_src").alias("u"),
+                                   F.col("_dst").alias("v")))
+    nodes = superstep.cut(e.select(F.col("u").alias("node"))
+                          .union(e.select("v")).distinct())
 
     def _grid(c):
         return F.round(c * grid) / grid
 
-    # the two L2 norms fold into the lineage as 1-row broadcast
-    # crossJoins (round-7 advice: a norm collect is a scheduled job —
-    # 3 iterations cost 6 driver round-trips); arithmetic is unchanged
-    # (same double divided by the same double), so grid-rounded scores
-    # are bit-identical. One checkpoint job per iteration, zero
-    # mid-iteration collects.
-    for _ in range(iters):
+    def _l2(c: str):
+        # the norm folds into the lineage as a 1-row broadcast
+        # crossJoin (round-7 advice: a norm collect is a scheduled job);
+        # arithmetic is unchanged (same double divided by the same
+        # double), so grid-rounded scores are bit-identical
+        norm = F.sqrt(F.sum(F.col(c) * F.col(c)))
+        return F.coalesce(F.when(norm != 0.0, norm), F.lit(1.0))
+
+    def step(scores: DataFrame, _rnd: int) -> DataFrame:
         # a(v) = Σ_{u→v} h(u)
         a_raw = e.join(scores.select(F.col("node").alias("u"), "hub"),
                        "u") \
             .groupBy("v").agg(F.sum("hub").alias("a"))
-        a_norm = a_raw.agg(F.coalesce(
-            F.when(F.sqrt(F.sum(F.col("a") * F.col("a"))) != 0.0,
-                   F.sqrt(F.sum(F.col("a") * F.col("a")))),
-            F.lit(1.0)).alias("__an"))
-        a_new = a_raw.crossJoin(F.broadcast(a_norm)) \
+        a_new = a_raw.crossJoin(F.broadcast(a_raw.agg(
+            _l2("a").alias("__an")))) \
             .select(F.col("v").alias("node"),
                     _grid(F.col("a") / F.col("__an")).alias("authority"))
         # h(u) = Σ_{u→v} a(v) over the NEW authorities
         h_raw = e.join(a_new.select(F.col("node").alias("v"),
                                     "authority"), "v") \
             .groupBy("u").agg(F.sum("authority").alias("h"))
-        h_norm = h_raw.agg(F.coalesce(
-            F.when(F.sqrt(F.sum(F.col("h") * F.col("h"))) != 0.0,
-                   F.sqrt(F.sum(F.col("h") * F.col("h")))),
-            F.lit(1.0)).alias("__hn"))
-        h_new = h_raw.crossJoin(F.broadcast(h_norm)) \
+        h_new = h_raw.crossJoin(F.broadcast(h_raw.agg(
+            _l2("h").alias("__hn")))) \
             .select(F.col("u").alias("node"),
                     _grid(F.col("h") / F.col("__hn")).alias("hub"))
-        scores = nodes.join(h_new, "node", "left") \
+        return nodes.join(h_new, "node", "left") \
             .join(a_new, "node", "left") \
             .select("node",
                     F.coalesce("hub", F.lit(0.0)).alias("hub"),
                     F.coalesce("authority", F.lit(0.0))
-                    .alias("authority")) \
-            .localCheckpoint(eager=True)
-    return scores
+                    .alias("authority"))
+
+    return superstep.run(
+        nodes.select("node", F.lit(1.0).alias("hub"),
+                     F.lit(1.0).alias("authority")), step, iters).state

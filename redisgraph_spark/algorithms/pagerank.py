@@ -5,7 +5,9 @@ proc_pagerank.c:202``, backed by LAGraph's matrix pagerank). Spark-native:
 the classic power-iteration with out-degree normalization; each iteration
 is one join + one aggregation, both on the node-id key, so at cluster
 scale the shuffle is stable across iterations and AQE can reuse the
-exchange partitioning.
+exchange partitioning. At sf0.1, local[4] (q_pagerank, q_ppr): three
+Spark jobs per iteration, among them the superstep's lineage cut and the
+one-row delta/dangling collect.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from redisgraph_spark.algorithms import superstep
 from redisgraph_spark.cypher import ast as A
 
 
@@ -21,26 +24,17 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iterations: int = 20,
              restart_ids: list[int] | None = None) -> DataFrame:
     """nodes: (_id), edges: (_src,_dst) → (_id, score).
 
-    Converges early when the L1 delta between iterations drops below
-    `tol` (LAGraph's pagerank stops on the same criterion). The state
-    carries the previous score and a dangling flag so the per-round
-    delta + dangling mass are ONE zero-join single-stage scan of the
-    cached checkpoint (measured faster than both the old two-join
-    stats job and a fully in-lineage broadcast-crossJoin fold).
-
-    ``restart_ids`` switches to PERSONALIZED PageRank: the teleport
-    (and dangling-mass) distribution becomes uniform over the given
-    source set instead of over all nodes, and scores initialize to
-    that distribution — the standard relatedness/recommendation
-    variant. The restart column rides the same per-node join key, so
-    the iteration's shuffle shape is unchanged."""
+    Power iteration with a restart vector r:
+    score ← (1−d)·r + d·(in-contributions + dangling_mass·r). Plain
+    PageRank restarts uniformly (r = 1/n on every node, a literal);
+    ``restart_ids`` switches to PERSONALIZED PageRank, r uniform over
+    that source set — the standard relatedness/recommendation variant.
+    Scores start at r. Converges early when the L1 delta between
+    iterations drops below `tol` (LAGraph's pagerank stops on the same
+    criterion)."""
     n_count = nodes.count()
     if n_count == 0:
         return nodes.select(F.col("_id"), F.lit(0.0).alias("score"))
-    base = 1.0 / n_count
-    if restart_ids is not None:
-        return _pagerank_personalized(nodes, edges, iterations, damping,
-                                      tol, [int(i) for i in restart_ids])
     # restrict to the node-induced subgraph (the reference runs on the
     # label-restricted submatrix): an edge to/from a node outside
     # `nodes` must neither inflate out-degrees (leaking rank mass out
@@ -50,131 +44,65 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iterations: int = 20,
                        "_src", "left_semi") \
                  .join(ids.withColumnRenamed("_id", "_dst"),
                        "_dst", "left_semi")
+    if restart_ids is None:
+        r = F.lit(1.0 / n_count)
+    else:
+        srcs = nodes.sparkSession.createDataFrame(
+            [(int(i),) for i in restart_ids], "_id long").dropDuplicates()
+        n_src = nodes.join(srcs, "_id", "left_semi").count()
+        if n_src == 0:
+            raise ValueError(
+                "personalized pageRank: no restart node is in the ranked "
+                "node set")
+        ids = ids.join(srcs.withColumn("__in", F.lit(True)), "_id", "left")
+        r = F.when(F.col("__in"), F.lit(1.0 / n_src)).otherwise(F.lit(0.0))
     deg = edges.groupBy("_src").agg(F.count("*").alias("__deg"))
-    ranks = nodes.select(F.col("_id"), F.lit(base).alias("score"))
-    # deg/e/dangling are static across iterations — materialize once
-    # instead of re-aggregating the full edge table every round
-    e = edges.select("_src", "_dst").join(deg, "_src") \
-        .localCheckpoint(eager=True)
-    dangling = nodes.select("_id").join(
-        deg, nodes["_id"] == deg["_src"], "left_anti") \
-        .withColumn("__dang", F.lit(1)) \
-        .localCheckpoint(eager=True)
-    # dangling-node mass is teleported uniformly (LAGraph-style).
-    # Iteration-stats shape (round-7 advice, then measured): the state
-    # carries the previous score and a dangling flag, so the per-round
-    # dangling mass + convergence delta are ONE single-stage scan of
-    # the cached checkpoint — no joins, no recompute. (The fully
+    # deg/e are static across iterations — materialize once instead of
+    # re-aggregating the full edge table every round
+    e = superstep.cut(edges.select("_src", "_dst").join(deg, "_src"))
+    # The state carries the previous score and a dangling flag, so the
+    # per-round dangling mass + convergence delta are ONE single-stage
+    # scan of the cut state — no joins, no recompute. (The fully
     # in-lineage variant — 1-row broadcast crossJoins — was built and
     # MEASURED SLOWER: two nested broadcast-exchange builds per
     # iteration cost 8-28s over 20 rounds vs ~0.1s/round for a cached
     # single-stage collect; see COVERAGE.md r8 notes.)
-    ranks = nodes.select("_id") \
-        .join(dangling.select("_id", "__dang"), "_id", "left") \
-        .select("_id", F.lit(base).alias("score"),
+    ranks = superstep.cut(
+        ids.join(deg.select(F.col("_src").alias("_id"), "__deg"), "_id",
+                 "left")
+        .select("_id", r.alias("score"), r.alias("__r"),
                 F.lit(None).cast("double").alias("__prev"),
-                (F.col("__dang") == 1).alias("__dang"))
-    d_mass = base * (dangling.count())
-    for _ in range(iterations):
+                F.col("__deg").isNull().alias("__dang")))
+    dangling_mass = F.coalesce(
+        F.sum(F.when(F.col("__dang"), F.col("score"))), F.lit(0.0))
+    d_mass = [ranks.agg(dangling_mass).collect()[0][0]]
+
+    def step(ranks: DataFrame, _rnd: int) -> DataFrame:
         contrib = e.join(ranks, e["_src"] == ranks["_id"], "inner") \
             .select(F.col("_dst").alias("_id"),
                     (F.col("score") / F.col("__deg")).alias("c"))
         sums = contrib.groupBy("_id").agg(F.sum("c").alias("s"))
-        ranks = ranks.select("_id", F.col("score").alias("__old"),
-                             "__dang") \
+        return ranks.select("_id", F.col("score").alias("__old"), "__r",
+                            "__dang") \
             .join(sums, "_id", "left") \
             .select(
                 "_id",
-                (F.lit((1 - damping) * base)
+                (F.lit(1.0 - damping) * F.col("__r")
                  + F.lit(damping) * (F.coalesce(F.col("s"), F.lit(0.0))
-                                     + F.lit(d_mass * base))
-                 ).alias("score"),
-                F.col("__old").alias("__prev"),
-                "__dang") \
-            .localCheckpoint(eager=True)
-        stats = ranks.agg(
-            F.sum(F.abs(F.col("score") - F.col("__prev")))
-            .alias("delta"),
-            F.coalesce(F.sum(F.when(F.col("__dang"), F.col("score"))),
-                       F.lit(0.0)).alias("dmass")).collect()[0]
-        d_mass = stats["dmass"]
-        if stats["delta"] is not None and stats["delta"] < tol:
-            break
-    return ranks.select("_id", "score")
-
-
-def _pagerank_personalized(nodes: DataFrame, edges: DataFrame,
-                           iterations: int, damping: float, tol: float,
-                           restart_ids: list[int]) -> DataFrame:
-    """Power iteration with a restart vector r (uniform over the source
-    set): score ← (1−d)·r + d·(in-contributions + dangling_mass·r).
-    Same two-jobs-per-iteration shape as the uniform path; r is one
-    extra per-node column carried through the same join key."""
-    spark = nodes.sparkSession
-    srcs = spark.createDataFrame([(int(i),) for i in restart_ids],
-                                 "_id long").dropDuplicates()
-    n_src = nodes.join(srcs, "_id", "left_semi").count()
-    if n_src == 0:
-        raise ValueError(
-            "personalized pageRank: no restart node is in the ranked "
-            "node set")
-    r0 = 1.0 / n_src
-    rv = nodes.select("_id").join(
-        srcs.withColumn("__in", F.lit(1)), "_id", "left") \
-        .select("_id", F.when(F.col("__in") == 1, F.lit(r0))
-                .otherwise(F.lit(0.0)).alias("__r")) \
-        .localCheckpoint(eager=True)
-    ids = nodes.select("_id")
-    edges = edges.join(ids.withColumnRenamed("_id", "_src"),
-                       "_src", "left_semi") \
-                 .join(ids.withColumnRenamed("_id", "_dst"),
-                       "_dst", "left_semi")
-    deg = edges.groupBy("_src").agg(F.count("*").alias("__deg"))
-    ranks = rv.select("_id", F.col("__r").alias("score"))
-    e = edges.select("_src", "_dst").join(deg, "_src") \
-        .localCheckpoint(eager=True)
-    dangling = rv.select("_id").join(
-        deg, rv["_id"] == deg["_src"], "left_anti") \
-        .withColumn("__dang", F.lit(1)) \
-        .localCheckpoint(eager=True)
-    # same iteration-stats shape as the uniform path (see the measured
-    # note there): state carries (score, prev, restart, dangling flag);
-    # per-round stats are ONE single-stage cached scan, no joins
-    one_minus_d = 1.0 - damping
-    ranks = rv.join(dangling.select("_id", "__dang"), "_id", "left") \
-        .select("_id", F.col("__r").alias("score"), "__r",
-                F.lit(None).cast("double").alias("__prev"),
-                (F.col("__dang") == 1).alias("__dang"))
-    d_mass = ranks.agg(F.coalesce(
-        F.sum(F.when(F.col("__dang"), F.col("score"))),
-        F.lit(0.0))).collect()[0][0]
-    for _ in range(iterations):
-        contrib = e.join(ranks, e["_src"] == ranks["_id"], "inner") \
-            .select(F.col("_dst").alias("_id"),
-                    (F.col("score") / F.col("__deg")).alias("c"))
-        sums = contrib.groupBy("_id").agg(F.sum("c").alias("s"))
-        ranks = ranks.select("_id", F.col("score").alias("__old"),
-                             "__r", "__dang") \
-            .join(sums, "_id", "left") \
-            .select(
-                "_id",
-                (F.lit(one_minus_d) * F.col("__r")
-                 + F.lit(damping) * (F.coalesce(F.col("s"), F.lit(0.0))
-                                     + F.lit(float(d_mass))
+                                     + F.lit(float(d_mass[0]))
                                      * F.col("__r"))
                  ).alias("score"),
-                F.col("__old").alias("__prev"),
-                "__r", "__dang") \
-            .localCheckpoint(eager=True)
+                "__r", F.col("__old").alias("__prev"), "__dang")
+
+    def small_delta(ranks: DataFrame, _old: DataFrame, _rnd: int) -> bool:
         stats = ranks.agg(
-            F.sum(F.abs(F.col("score") - F.col("__prev")))
-            .alias("delta"),
-            F.coalesce(F.sum(F.when(F.col("__dang"), F.col("score"))),
-                       F.lit(0.0)).alias("dmass")).collect()[0]
-        d_mass = stats["dmass"]
-        if stats["delta"] is not None and stats["delta"] < tol:
-            break
-    return ranks.select("_id", "score")
+            F.sum(F.abs(F.col("score") - F.col("__prev"))).alias("delta"),
+            dangling_mass.alias("dmass")).collect()[0]
+        d_mass[0] = stats["dmass"]
+        return stats["delta"] is not None and stats["delta"] < tol
+
+    res = superstep.run(ranks, step, iterations, small_delta)
+    return res.state.select("_id", "score")
 
 
 def pagerank_proc(planner, args: list[A.Expr]):
@@ -184,20 +112,12 @@ def pagerank_proc(planner, args: list[A.Expr]):
     submatrix generalized to a label-set-induced subgraph — cross-label
     relations like Nation→Region are otherwise unrankable, every edge
     leaving the single label's node set)."""
+    from redisgraph_spark.functions.procedures import arg_value, yield_nodes
     g = planner.graph
-
-    def _s(e):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.ListLiteral):
-            return [_s(x) for x in e.items]
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise ValueError("algo.pageRank args must be literals")
-
-    label = _s(args[0]) if args else None
-    rel = _s(args[1]) if len(args) > 1 else None
-    sources = _s(args[2]) if len(args) > 2 else None
+    vals = [arg_value(planner, a, "algo.pageRank arguments") for a in args]
+    label = vals[0] if vals else None
+    rel = vals[1] if len(vals) > 1 else None
+    sources = vals[2] if len(vals) > 2 else None
     if sources is not None:
         if isinstance(sources, int):
             sources = [sources]
@@ -214,9 +134,4 @@ def pagerank_proc(planner, args: list[A.Expr]):
     edges = g.edges([rel] if rel else None)
     pr = pagerank(nodes.select("_id"), edges.select("_src", "_dst"),
                   restart_ids=sources)
-    node_struct = nodes.select(
-        F.struct(*[F.col(c) for c in nodes.columns]).alias("node"),
-        F.col("_id").alias("__prid"))
-    out = pr.join(node_struct, pr["_id"] == F.col("__prid"), "inner") \
-        .select("node", "score")
-    return out, ["node", "score"]
+    return yield_nodes(pr, nodes, id_col="_id"), ["node", "score"]

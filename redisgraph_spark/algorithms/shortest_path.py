@@ -5,7 +5,9 @@ Reference: ``shortestpath`` runs a push/pull BFS
 ``src/algorithms/LAGraph_bfs_pushpull.c``). Spark-native version: per-hop
 equi-join BFS with per-(origin, node) deduplication keeping the
 lexicographically-smallest edge-id path — deterministic, and the frontier
-stays *sets of nodes*, not paths, so it scales like distributed BFS.
+stays *sets of nodes*, not paths, so it scales like distributed BFS. Each
+hop is one superstep (q_shortest_path at sf0.1, local[4]: 3-4 Spark jobs
+per hop, among them the lineage cut and the empty-frontier probe).
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from redisgraph_spark.cypher import ast as A
+from redisgraph_spark.algorithms import superstep
 from redisgraph_spark.algorithms import traversal as TRAV
 from redisgraph_spark.planner.expressions import VarInfo
 
@@ -53,28 +56,16 @@ def compile_shortest_path(planner, ctx, path: A.PatternPath) -> None:
     e = oriented.select(F.col(from_c), F.col(to_c).alias("__sp_next"),
                         F.col("_id").alias("__sp_eid"))
 
-    # BFS state is (origin id, current node, path ids) over DISTINCT
-    # origins only — never the full input rows.  Input rows re-attach by
-    # an origin-id join afterwards, so many rows sharing a source (e.g.
-    # a bound destination varying per row) cost one BFS, and the frontier
-    # size is bounded by |reachable nodes|, not |input rows| — the shape
-    # that survives a 100× scale-up.
-    frontier = ctx.df.select(
-        F.col(f"{src}._id").alias("__sp_origin")).dropDuplicates().select(
-        F.col("__sp_origin"),
-        F.col("__sp_origin").alias("__sp_cur"),
-        F.array().cast("array<long>").alias("__sp_eids"),
-        F.array(F.col("__sp_origin")).alias("__sp_nids"),
-    )
-    results = []
-    if rel.min_hops == 0:
-        results.append(frontier)
-    seen = frontier.select(F.col("__sp_origin").alias("__so"),
-                           F.col("__sp_cur").alias("__sc")).dropDuplicates()
-    hop = 0
-    while hop < max_hops:
-        hop += 1
-        nxt = frontier.join(e, frontier["__sp_cur"] == e[from_c], "inner") \
+    # BFS state is (origin id, current node, path ids, hop) over
+    # DISTINCT origins only — never the full input rows. Input rows
+    # re-attach by an origin-id join afterwards, so many rows sharing a
+    # source (e.g. a bound destination varying per row) cost one BFS,
+    # and the state size is bounded by |reachable nodes|, not |input
+    # rows| — the shape that survives a 100× scale-up. Every reached
+    # (origin, node) is in the state, so it is also the seen set.
+    def step(reached, hop: int):
+        nxt = reached.filter(F.col("__sp_hop") == hop - 1) \
+            .join(e, F.col("__sp_cur") == e[from_c], "inner") \
             .select(F.col("__sp_origin"),
                     F.col("__sp_next").alias("__sp_cur"),
                     F.array_append(F.col("__sp_eids"),
@@ -83,11 +74,7 @@ def compile_shortest_path(planner, ctx, path: A.PatternPath) -> None:
                                    F.col("__sp_next")).alias("__sp_nids"))
         # BFS pruning: drop nodes already reached from this origin at a
         # smaller hop count (first reach = shortest)
-        nxt = nxt.join(
-            seen,
-            (nxt["__sp_origin"] == seen["__so"])
-            & (nxt["__sp_cur"] == seen["__sc"]),
-            "left_anti")
+        nxt = nxt.join(reached, ["__sp_origin", "__sp_cur"], "left_anti")
         if path.shortest == "all":
             # allShortestPaths: keep every distinct first-reach path
             nxt = nxt.dropDuplicates(["__sp_origin", "__sp_cur",
@@ -99,29 +86,25 @@ def compile_shortest_path(planner, ctx, path: A.PatternPath) -> None:
                      .alias("__m")) \
                 .select("__sp_origin", "__sp_cur", F.col("__m.__sp_eids"),
                         F.col("__m.__sp_nids"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        frontier = nxt
-        if hop >= rel.min_hops:
-            results.append(nxt)
-        seen = seen.unionByName(
-            nxt.select(F.col("__sp_origin").alias("__so"),
-                       F.col("__sp_cur").alias("__sc"))).dropDuplicates() \
-            .localCheckpoint(eager=True)
-    else:
-        if unbounded:
-            import warnings
-            warnings.warn(
-                f"unbounded shortestPath() stopped at {MAX_BFS_HOPS} "
-                "hops with a live frontier; longer shortest paths are "
-                "not found", RuntimeWarning, stacklevel=2)
+        return reached.unionByName(
+            nxt.withColumn("__sp_hop", F.lit(hop)))
 
-    if not results:
-        results = [frontier.limit(0)]
-    paths = results[0]
-    for r in results[1:]:
-        paths = paths.unionByName(r)
+    origins = ctx.df.select(
+        F.col(f"{src}._id").alias("__sp_origin")).dropDuplicates()
+    res = superstep.run(
+        origins.select(
+            F.col("__sp_origin"),
+            F.col("__sp_origin").alias("__sp_cur"),
+            F.array().cast("array<long>").alias("__sp_eids"),
+            F.array(F.col("__sp_origin")).alias("__sp_nids"),
+            F.lit(0).alias("__sp_hop")),
+        step, max_hops, superstep.frontier_empty(
+            lambda reached, hop: reached.filter(F.col("__sp_hop") == hop)))
+    if unbounded:
+        superstep.warn_capped(res, "unbounded shortestPath()",
+                              "longer shortest paths are not found")
+    paths = res.state.filter(F.col("__sp_hop") >= rel.min_hops) \
+        .drop("__sp_hop")
 
     # re-attach the input rows by origin id
     out = ctx.df.join(
@@ -185,8 +168,8 @@ def _materialize_path_structs(planner, out, pvar: str):
     posexplode→join→regroup rounds keyed by a checkpointed row id."""
     g = planner.graph
     row = planner.sym("sprow")
-    out = out.withColumn(row, F.monotonically_increasing_id()) \
-        .localCheckpoint(eager=True)
+    out = superstep.cut(
+        out.withColumn(row, F.monotonically_increasing_id()))
 
     def pack(id_col: str, flat, alias: str):
         struct = F.struct(*[F.col(c) for c in flat.columns])

@@ -1,4 +1,4 @@
-"""Single-source weighted shortest paths (bounded-hop Bellman-Ford).
+"""Weighted shortest paths from a source set (bounded-hop Bellman-Ford).
 
 Additive scope like algo.wcc — the reference registry ships only
 BFS/pageRank (``/root/reference/src/procedures/procedure.c:27-42``);
@@ -16,10 +16,13 @@ fixed-unroll SQL oracle replays the identical arithmetic.
 
 Scale shape per round: one equi-join of the frontier against the edge
 list (keyed shuffle on the join key, same partitioning every round so
-AQE reuses exchanges) + one min-aggregate keyed by destination. State
-is one (node, dist) row per reached node; the frontier-only join means
-converged regions drop out of later rounds. No driver-side loops over
-rows; convergence early-exit is a 1-row ``take(1)`` probe.
+AQE reuses exchanges) + one min-aggregate of state and candidates keyed
+by (root, node). State is one (root, node, dist) row per reached node;
+the frontier-only join means converged regions send no messages in
+later rounds. No driver-side loops over rows; convergence early-exit
+is a 1-row ``take(1)`` probe. At sf0.1, local[4] (q_sssp,
+q_sssp_correlated): three Spark jobs per round, among them the lineage
+cut and the probe.
 """
 
 from __future__ import annotations
@@ -27,138 +30,75 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from redisgraph_spark.algorithms import superstep
+
 MAX_HOPS = 64
-
-
-def sssp(edges: DataFrame, source_id: int, weight_col: str | None,
-         max_hops: int = MAX_HOPS) -> DataFrame:
-    """``edges``: ``_src``/``_dst`` (+ ``weight_col`` if given; null or
-    missing weights count 1.0). Returns ``(node, distance, hops)`` for
-    every node reachable from ``source_id`` within ``max_hops`` edges —
-    source included at distance 0.0 — where ``distance`` is the minimum
-    total weight and ``hops`` the edge count of that minimal path
-    (min hops among equal-weight paths: deterministic tie-break).
-    """
-    w = (F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
-         if weight_col else F.lit(1.0))
-    # materialize the slim (src, dst, w) projection once — every
-    # relaxation round joins it, and without the checkpoint each round
-    # would re-scan the source parquet + re-union the relation tables
-    e = edges.select(F.col("_src").alias("__u"),
-                     F.col("_dst").alias("__v"),
-                     w.alias("__w")) \
-        .localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(source_id), 0.0, 0)], "node long, distance double, hops int") \
-        .localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_hops):
-        cand = frontier.join(e, frontier["node"] == e["__u"]) \
-            .select(F.col("__v").alias("node"),
-                    (F.col("distance") + F.col("__w")).alias("distance"),
-                    (F.col("hops") + 1).alias("hops")) \
-            .groupBy("node").agg(
-                F.min(F.struct("distance", "hops")).alias("__b")) \
-            .select("node", F.col("__b.distance").alias("distance"),
-                    F.col("__b.hops").alias("hops"))
-        improved = cand.join(
-            dist.select(F.col("node"), F.col("distance").alias("__od"),
-                        F.col("hops").alias("__oh")),
-            "node", "left") \
-            .filter(F.col("__od").isNull()
-                    | (F.col("distance") < F.col("__od"))
-                    | ((F.col("distance") == F.col("__od"))
-                       & (F.col("hops") < F.col("__oh")))) \
-            .select("node", "distance", "hops") \
-            .localCheckpoint(eager=True)
-        if not improved.take(1):
-            break
-        dist = dist.join(improved.select("node"), "node", "left_anti") \
-            .unionByName(improved).localCheckpoint(eager=True)
-        frontier = improved
-    return dist
 
 
 def sssp_multi(edges: DataFrame, roots: DataFrame,
                weight_col: str | None,
                max_hops: int = MAX_HOPS) -> DataFrame:
     """Multi-source SSSP: one distributed Bellman-Ford keyed by
-    ``__root`` — the vectorized shape for correlated
-    ``CALL algo.SSSP(n, …)`` fan-outs (round-7 advice #6: per-row
-    sources must never become a driver-side loop; same design as
-    ``bfs.bfs_call``'s multi-source frontier). ``roots``: one
-    ``__root`` column. Returns ``(__root, node, distance, hops)`` —
-    each source included at distance 0."""
+    ``__root`` — the vectorized shape for ``CALL algo.SSSP`` fan-outs
+    (round-7 advice #6: per-row sources must never become a driver-side
+    loop; same design as ``bfs.bfs_call``'s multi-source frontier).
+    ``edges``: ``_src``/``_dst`` (+ ``weight_col`` if given; null or
+    missing weights count 1.0). ``roots``: one ``__root`` column.
+    Returns ``(__root, node, distance, hops)`` for every node reachable
+    from a root within ``max_hops`` edges — each root included at
+    distance 0 — where ``distance`` is the minimum total weight and
+    ``hops`` the edge count of that minimal path (min hops among
+    equal-weight paths: deterministic tie-break)."""
     w = (F.coalesce(F.col(weight_col).cast("double"), F.lit(1.0))
          if weight_col else F.lit(1.0))
-    e = edges.select(F.col("_src").alias("__u"),
-                     F.col("_dst").alias("__v"),
-                     w.alias("__w")) \
-        .localCheckpoint(eager=True)
-    dist = roots.select(
-        F.col("__root"), F.col("__root").alias("node"),
-        F.lit(0.0).alias("distance"), F.lit(0).alias("hops")) \
-        .localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_hops):
-        cand = frontier.join(e, frontier["node"] == e["__u"]) \
+    # materialize the slim (src, dst, w) projection once — every
+    # relaxation round joins it, and without the cut each round would
+    # re-scan the source parquet + re-union the relation tables
+    e = superstep.cut(edges.select(F.col("_src").alias("__u"),
+                                   F.col("_dst").alias("__v"),
+                                   w.alias("__w")))
+    best = F.min(F.struct("distance", "hops", "__at")).alias("__b")
+
+    def step(dist: DataFrame, rnd: int) -> DataFrame:
+        # relax from the rows improved last round; the (distance, hops,
+        # round) minimum keeps an old row on a tie, so a row carries
+        # round ``rnd`` only if this superstep strictly improved it
+        cand = dist.filter(F.col("__at") == rnd - 1) \
+            .join(e, F.col("node") == e["__u"]) \
             .select("__root", F.col("__v").alias("node"),
                     (F.col("distance") + F.col("__w")).alias("distance"),
-                    (F.col("hops") + 1).alias("hops")) \
-            .groupBy("__root", "node").agg(
-                F.min(F.struct("distance", "hops")).alias("__b")) \
-            .select("__root", "node",
-                    F.col("__b.distance").alias("distance"),
-                    F.col("__b.hops").alias("hops"))
-        improved = cand.join(
-            dist.select("__root", "node",
-                        F.col("distance").alias("__od"),
-                        F.col("hops").alias("__oh")),
-            ["__root", "node"], "left") \
-            .filter(F.col("__od").isNull()
-                    | (F.col("distance") < F.col("__od"))
-                    | ((F.col("distance") == F.col("__od"))
-                       & (F.col("hops") < F.col("__oh")))) \
-            .select("__root", "node", "distance", "hops") \
-            .localCheckpoint(eager=True)
-        if not improved.take(1):
-            break
-        dist = dist.join(improved.select("__root", "node"),
-                         ["__root", "node"], "left_anti") \
-            .unionByName(improved).localCheckpoint(eager=True)
-        frontier = improved
-    return dist
+                    (F.col("hops") + 1).alias("hops"),
+                    F.lit(rnd).alias("__at"))
+        return dist.unionByName(cand).groupBy("__root", "node").agg(best) \
+            .select("__root", "node", "__b.distance", "__b.hops",
+                    "__b.__at")
+
+    dist = roots.select(
+        F.col("__root"), F.col("__root").alias("node"),
+        F.lit(0.0).alias("distance"), F.lit(0).alias("hops"),
+        F.lit(0).alias("__at"))
+    res = superstep.run(dist, step, max_hops, superstep.frontier_empty(
+        lambda d, rnd: d.filter(F.col("__at") == rnd)))
+    return res.state.drop("__at")
 
 
 def sssp_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
-    """Correlated ``CALL algo.SSSP(n[, reltype[, weight[, maxHops]]])``
-    with a bound node-variable source: ONE keyed multi-source job, the
-    per-record fan-out joined back on the source id (no driver loop —
-    reference ProcedureCall is per-record, op_procedure_call.c)."""
-    from redisgraph_spark.cypher import ast as A
+    """``CALL algo.SSSP(source[, reltype[, weight[, maxHops]]])``. The
+    source is a bound node variable (correlated: the per-record fan-out
+    is ONE keyed multi-source job joined back on the source id — no
+    driver loop; reference ProcedureCall is per-record,
+    op_procedure_call.c) or an integer node id (one root)."""
+    from redisgraph_spark.functions.procedures import (
+        arg_value, attach_roots, source_roots, yield_nodes)
     from redisgraph_spark.planner.planner import PlanError
 
-    if not clause.args:
-        raise PlanError("algo.SSSP requires a source")
-    src_e = clause.args[0]
-    if not isinstance(src_e, A.Variable) or src_e.name not in ctx.vars \
-            or ctx.vars[src_e.name].kind != "node":
-        raise PlanError("algo.SSSP source must be a bound node variable "
-                        "or an integer node id")
-
-    def _lit(e, what):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise PlanError(f"algo.SSSP {what} must be a literal or parameter")
-
-    rel = _lit(clause.args[1], "reltype") if len(clause.args) > 1 else None
-    weight = _lit(clause.args[2], "weight") if len(clause.args) > 2 \
-        else None
-    hops = _lit(clause.args[3], "max hops") if len(clause.args) > 3 \
-        else MAX_HOPS
+    roots, key = source_roots(planner, ctx, clause, "algo.SSSP",
+                              many=False)
+    opts = [arg_value(planner, a, "algo.SSSP options")
+            for a in clause.args[1:]]
+    rel = opts[0] if opts else None
+    weight = opts[1] if len(opts) > 1 else None
+    hops = opts[2] if len(opts) > 2 else MAX_HOPS
     if rel is not None and not isinstance(rel, str):
         raise PlanError("algo.sssp reltype must be a string or NULL")
     if weight is not None and not isinstance(weight, str):
@@ -171,17 +111,6 @@ def sssp_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
     if weight is not None and weight not in edges.columns:
         raise PlanError(f"algo.sssp: no edge property {weight!r} on the "
                         "selected relation(s)")
-    roots = ctx.df.select(F.col(f"{src_e.name}._id").alias("__root")) \
-        .filter(F.col("__root").isNotNull()) \
-        .dropDuplicates().localCheckpoint(eager=True)
     dist = sssp_multi(edges, roots, weight, max_hops=hops)
-    nodes = g.nodes(None)
-    node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-    enriched = dist.withColumnRenamed("node", "__ss_id") \
-        .join(nodes, F.col("__ss_id") == nodes["_id"]) \
-        .select("__root", node_struct.alias("node"), "distance", "hops")
-    out = ctx.df.join(
-        enriched,
-        F.col(f"{src_e.name}._id") == enriched["__root"], "inner") \
-        .drop("__root")
-    return out, ["node", "distance", "hops"]
+    return attach_roots(ctx, key, yield_nodes(dist, g.nodes(None))), \
+        ["node", "distance", "hops"]

@@ -13,13 +13,17 @@ replay the exact same walks.
 Scale shape: adjacency is ranked once (row_number over _src sorted by
 _dst — one shuffle), then each step is ONE equi-join of the frontier
 against (node, index): cost ∝ walks × length, never degree. Sinks end
-their walks early.
+their walks early. At sf0.1, local[4] (q_random_walk): three Spark jobs
+per step, among them the superstep's lineage cut and its empty-frontier
+probe.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from redisgraph_spark.algorithms import superstep
 
 # mix constants: Knuth multiplicative (2654435761) + two odd primes;
 # all intermediates bounded < 2^62 for node ids < ~1e15
@@ -41,71 +45,58 @@ def random_walks(edges: DataFrame, start_ids, length: int = 5,
     for the correlated-CALL path — starts stay distributed). Returns
     ``(walk, step, node)`` rows, step 0 = the start node; a walk stops
     early at a sink (node with no out-edges)."""
-    spark = edges.sparkSession
     adj = edges.select(F.col("_src").alias("__n"),
                        F.col("_dst").alias("__m")).distinct()
     w = Window.partitionBy("__n").orderBy("__m")
     adj = adj.select("__n", "__m",
                      (F.row_number().over(w) - 1).alias("__idx"))
     deg = adj.groupBy("__n").agg(F.count(F.lit(1)).alias("__deg"))
-    adj = adj.join(deg, "__n").localCheckpoint(eager=True)
+    adj = superstep.cut(adj.join(deg, "__n"))
     if isinstance(start_ids, DataFrame):
-        frontier = start_ids.select(
-            F.col(start_ids.columns[0]).cast("long").alias("__walk"),
-            F.col(start_ids.columns[0]).cast("long").alias("__node")) \
-            .filter(F.col("__walk").isNotNull()) \
-            .dropDuplicates(["__walk"]).localCheckpoint(eager=True)
+        starts = start_ids.select(
+            F.col(start_ids.columns[0]).cast("long").alias("__walk")) \
+            .filter(F.col("__walk").isNotNull())
     else:
-        frontier = spark.createDataFrame(
-            [(int(s), int(s)) for s in start_ids],
-            "__walk long, __node long").dropDuplicates(["__walk"])
-    out = frontier.select("__walk", F.lit(0).alias("__step"),
-                          F.col("__node"))
-    steps = [out]
-    for t in range(1, length + 1):
-        nxt = frontier.join(
-            adj, frontier["__node"] == adj["__n"], "inner")
+        starts = edges.sparkSession.createDataFrame(
+            [(int(s),) for s in start_ids], "__walk long")
+
+    def step(walks: DataFrame, t: int) -> DataFrame:
         pick = _choice(F.col("__walk"), t, F.col("__node"),
                        F.col("__deg"), seed)
-        nxt = nxt.filter(F.col("__idx") == pick) \
-            .select("__walk", F.col("__m").alias("__node"))
-        nxt = nxt.localCheckpoint(eager=True)
-        if not nxt.take(1):
-            break
-        steps.append(nxt.select(
-            "__walk", F.lit(t).alias("__step"), "__node"))
-        frontier = nxt
-    allsteps = steps[0]
-    for s in steps[1:]:
-        allsteps = allsteps.unionByName(s)
-    return allsteps.select(F.col("__walk").alias("walk"),
-                           F.col("__step").alias("step"),
-                           F.col("__node").alias("node"))
+        return walks.unionByName(
+            walks.filter(F.col("__step") == t - 1)
+            .join(adj, F.col("__node") == adj["__n"], "inner")
+            .filter(F.col("__idx") == pick)
+            .select("__walk", F.lit(t).alias("__step"),
+                    F.col("__m").alias("__node")))
+
+    # a walk that reaches a sink stops; the run halts once every walk has
+    walks = superstep.run(
+        starts.dropDuplicates(["__walk"]).select(
+            "__walk", F.lit(0).alias("__step"),
+            F.col("__walk").alias("__node")),
+        step, length, superstep.frontier_empty(
+            lambda ws, t: ws.filter(F.col("__step") == t))).state
+    return walks.select(F.col("__walk").alias("walk"),
+                        F.col("__step").alias("step"),
+                        F.col("__node").alias("node"))
 
 
 def walks_call(planner, ctx, clause):
-    """Correlated ``CALL algo.randomWalk(n[, reltype[, length[,
-    seed]]])`` with a bound node-variable start: the per-row starts
-    feed ONE walk-keyed stepper (cost ∝ starts × length), joined back
-    on the start id — no driver loop."""
-    from redisgraph_spark.cypher import ast as A
+    """``CALL algo.randomWalk(starts[, reltype[, length[, seed]]])``.
+    Starts are a bound node variable (correlated: the per-row starts
+    feed ONE walk-keyed stepper, cost ∝ starts × length, joined back on
+    the start id — no driver loop) or a literal start-id list."""
+    from redisgraph_spark.functions.procedures import (
+        arg_value, attach_roots, source_roots, yield_nodes)
     from redisgraph_spark.planner.planner import PlanError
 
-    src_e = clause.args[0]
-
-    def _lit(e, what):
-        if isinstance(e, A.Literal):
-            return e.value
-        if isinstance(e, A.Parameter):
-            return planner.params[e.name]
-        raise PlanError(f"algo.randomWalk {what} must be a literal or "
-                        f"parameter")
-
+    roots, key = source_roots(planner, ctx, clause, "algo.randomWalk",
+                              many=True)
     rel = None
-    length, seed = 5, 7
     ints = []
     for a in clause.args[1:]:
-        v = _lit(a, "option")
+        v = arg_value(planner, a, "algo.randomWalk options")
         if isinstance(v, str):
             rel = v
         elif isinstance(v, int) and not isinstance(v, bool):
@@ -113,17 +104,14 @@ def walks_call(planner, ctx, clause):
         elif v is not None:
             raise PlanError("algo.randomWalk options are an optional "
                             "reltype, walk length, and seed")
-    if ints:
-        length = ints[0]
-    if len(ints) > 1:
-        seed = ints[1]
+    length = ints[0] if ints else 5
+    seed = ints[1] if len(ints) > 1 else 7
     if length < 1:
         raise PlanError("algo.randomWalk length must be >= 1")
     g = planner.graph
-    starts = ctx.df.select(F.col(f"{src_e.name}._id").alias("__walk"))
     wk = random_walks(g.edges([rel] if rel else None)
-                      .select("_src", "_dst"), starts,
+                      .select("_src", "_dst"), roots,
                       length=length, seed=seed)
-    out = ctx.df.join(
-        wk, F.col(f"{src_e.name}._id") == wk["walk"], "inner")
-    return out, ["walk", "step", "node"]
+    out = yield_nodes(wk.withColumn("__root", F.col("walk")),
+                      g.nodes(None))
+    return attach_roots(ctx, key, out), ["walk", "step", "node"]

@@ -39,10 +39,89 @@ PROCS = {
     "db.idx.fulltext.drop": ("ok",),
 }
 
+# Per-source procedures: ONE roots-keyed multi-source job whether the
+# sources are a bound node variable (correlated CALL, rows joined back
+# on the source id) or literal/parameter ids (an inline roots frame).
+PER_SOURCE = {"algo.bfs", "algo.sssp", "algo.closeness", "algo.randomwalk"}
+
 # Procedures that mutate graph/catalog state at plan time — callers
 # (Graph.query version bump, Graph.explain rollback, GRAPH.RO_QUERY
 # rejection) all consult this one set.
 WRITE_PROCS = {"db.idx.fulltext.createnodeindex", "db.idx.fulltext.drop"}
+
+
+def per_source_call(planner, ctx, clause) -> tuple[DataFrame, list[str]]:
+    """Plan a PER_SOURCE procedure; ``ctx`` is ``None`` for a standalone
+    call with literal sources."""
+    from redisgraph_spark.algorithms import bfs, centrality, sssp, walks
+    call = {"algo.bfs": bfs.bfs_call, "algo.sssp": sssp.sssp_call,
+            "algo.closeness": centrality.closeness_call,
+            "algo.randomwalk": walks.walks_call}[clause.proc]
+    return call(planner, ctx, clause)
+
+
+def arg_value(planner, e: A.Expr, what: str):
+    """A procedure argument that must be constant: literal, parameter,
+    or a list of those."""
+    from redisgraph_spark.planner.planner import PlanError
+    if isinstance(e, A.Literal):
+        return e.value
+    if isinstance(e, A.Parameter):
+        return planner.params[e.name]
+    if isinstance(e, A.ListLiteral):
+        return [arg_value(planner, x, what) for x in e.items]
+    raise PlanError(f"{what} must be a literal or parameter")
+
+
+def source_roots(planner, ctx, clause, what: str, many: bool):
+    """``(roots, key)`` for a per-source CALL: ``roots`` is a one-column
+    ``__root`` frame of distinct source ids, ``key`` the input-row
+    column it joins back on — the ids of a bound node variable, or
+    ``None`` for literal/parameter ids (one id, or a list if ``many``)
+    given as an inline frame."""
+    from redisgraph_spark.algorithms import superstep
+    from redisgraph_spark.planner.planner import PlanError
+    src = clause.args[0] if clause.args else None
+    if isinstance(src, A.Variable) and ctx is not None \
+            and ctx.df is not None \
+            and getattr(ctx.vars.get(src.name), "kind", None) == "node":
+        key = F.col(f"{src.name}._id")
+        return superstep.cut(ctx.df.select(key.alias("__root"))
+                             .filter(F.col("__root").isNotNull())
+                             .dropDuplicates()), key
+    val = arg_value(planner, src, f"{what} source") if src is not None \
+        else None
+    ids = val if many else [val]
+    if (not isinstance(ids, list) or not ids
+            or not all(isinstance(i, int) and not isinstance(i, bool)
+                       for i in ids)):
+        raise PlanError(
+            f"{what} requires a bound node variable or "
+            + ("a non-empty source-node id list" if many
+               else "an integer source id"))
+    return planner.graph.spark.createDataFrame(
+        [(i,) for i in ids], "__root long").dropDuplicates(), None
+
+
+def attach_roots(ctx, key, out: DataFrame) -> DataFrame:
+    """Per-root results back onto the input rows (inner join on the
+    source id), or just the results of a standalone call."""
+    if key is None:
+        return out.drop("__root")
+    return ctx.df.join(out, key == out["__root"], "inner").drop("__root")
+
+
+def yield_nodes(df: DataFrame, nodes: DataFrame, id_col: str = "node",
+                alias: str = "node", how: str = "inner") -> DataFrame:
+    """``df`` with its node-id column ``id_col`` replaced, in place, by
+    the full node struct ``alias`` — the ``YIELD node`` shape of every
+    algo.* procedure, so ``RETURN node.name`` works uniformly."""
+    keyed = df.withColumnRenamed(id_col, "__yid")
+    packed = nodes.select(
+        F.col("_id").alias("__ynid"),
+        F.struct(*[F.col(c) for c in nodes.columns]).alias(alias))
+    return keyed.join(packed, keyed["__yid"] == packed["__ynid"], how) \
+        .select(*[alias if c == id_col else c for c in df.columns])
 
 
 def _cypher_type_ok(t: str, v) -> bool:
@@ -217,14 +296,7 @@ def run_procedure(planner, clause: A.CallClause
                     "(expected 'star')")
         comp = algo(
             g.nodes().select("_id"), g.edges().select("_src", "_dst"))
-        # yield the full node struct like algo.pageRank / queryNodes —
-        # `YIELD node ... RETURN node.name` must work uniformly
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = comp.withColumnRenamed("node", "__wcc_id") \
-            .join(nodes, F.col("__wcc_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "component")
-        return out, ["node", "component"]
+        return yield_nodes(comp, g.nodes()), ["node", "component"]
     if name == "algo.trianglecount":
         from redisgraph_spark.algorithms.components import triangle_count
         return triangle_count(g.edges().select("_src", "_dst")), \
@@ -256,12 +328,7 @@ def run_procedure(planner, clause: A.CallClause
         else:
             ids = g.nodes().select("_id")
         lab = label_propagation(ids, edges, iters=iters)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = lab.withColumnRenamed("node", "__lpa_id") \
-            .join(nodes, F.col("__lpa_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "label")
-        return out, ["node", "label"]
+        return yield_nodes(lab, g.nodes()), ["node", "label"]
     if name == "algo.kcore":
         # additive (like algo.wcc): k-core membership by synchronous
         # peeling. args: required int k, optional relation-type string
@@ -290,12 +357,7 @@ def run_procedure(planner, clause: A.CallClause
             raise ValueError("algo.kCore requires an integer k >= 1")
         edges = g.edges([rel] if rel else None).select("_src", "_dst")
         core = k_core(edges, k, iters=iters)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = core.withColumnRenamed("node", "__kc_id") \
-            .join(nodes, F.col("__kc_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"))
-        return out, ["node"]
+        return yield_nodes(core, g.nodes()), ["node"]
     if name == "algo.nodesimilarity":
         # additive: neighbor-set Jaccard similarity (GDS nodeSimilarity
         # analog). args: optional relation-type string, optional
@@ -336,113 +398,9 @@ def run_procedure(planner, clause: A.CallClause
             direction=direction, threshold=thr, top_k=topk,
             max_neighbor_degree=None)
         nodes = g.nodes()
-        packed = nodes.select(
-            F.col("_id").alias("__nid"),
-            F.struct(*[F.col(c) for c in nodes.columns]).alias("__ns"))
-        p1 = packed.withColumnRenamed("__ns", "node1") \
-            .withColumnRenamed("__nid", "__nid1")
-        p2 = packed.withColumnRenamed("__ns", "node2") \
-            .withColumnRenamed("__nid", "__nid2")
-        out = sim \
-            .join(p1, sim["node_a"] == p1["__nid1"]) \
-            .join(p2, sim["node_b"] == p2["__nid2"]) \
-            .select("node1", "node2", "intersection", "jaccard")
+        out = yield_nodes(yield_nodes(sim, nodes, "node_a", "node1"),
+                          nodes, "node_b", "node2")
         return out, ["node1", "node2", "intersection", "jaccard"]
-    if name == "algo.closeness":
-        # additive: k-bounded closeness/harmonic centrality for an
-        # explicit source set (all-nodes closeness is O(V·E) — never
-        # the right cluster job; a bounded candidate set is). args:
-        # required source-id list, optional relation-type string,
-        # optional int max hop count.
-        from redisgraph_spark.algorithms.centrality import (MAX_HOPS,
-                                                            closeness)
-        srcs = None
-        rel = None
-        hops = MAX_HOPS
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                val = a.value
-            elif isinstance(a, A.Parameter):
-                val = planner.params[a.name]
-            elif isinstance(a, A.ListLiteral):
-                val = [x.value if isinstance(x, A.Literal) else x
-                       for x in a.items]
-            else:
-                val = a
-            if isinstance(val, list):
-                srcs = val
-            elif isinstance(val, str):
-                rel = val
-            elif isinstance(val, int) and not isinstance(val, bool):
-                hops = val
-            elif val is not None:
-                raise ValueError(
-                    "algo.closeness: args are a source-id list, an "
-                    "optional relation-type string and an optional "
-                    "int max hop count")
-        if (not srcs or not isinstance(srcs, list)
-                or not all(isinstance(s, int) for s in srcs)):
-            raise ValueError(
-                "algo.closeness requires a non-empty source-node id "
-                "list")
-        if hops < 1:
-            raise ValueError("algo.closeness max hops must be >= 1")
-        cl = closeness(g.edges([rel] if rel else None)
-                       .select("_src", "_dst"), srcs, max_hops=hops)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = cl.withColumnRenamed("node", "__cl_id") \
-            .join(nodes, F.col("__cl_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "reached", "closeness",
-                    "harmonic")
-        return out, ["node", "reached", "closeness", "harmonic"]
-    if name == "algo.randomwalk":
-        # additive: deterministic seeded walks (node2vec/DeepWalk
-        # corpus generation). args: source-id list, optional relation
-        # type, optional int walk length, optional int seed.
-        from redisgraph_spark.algorithms.walks import random_walks
-        srcs = None
-        rel = None
-        ints: list[int] = []
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                val = a.value
-            elif isinstance(a, A.Parameter):
-                val = planner.params[a.name]
-            elif isinstance(a, A.ListLiteral):
-                val = [x.value if isinstance(x, A.Literal) else x
-                       for x in a.items]
-            else:
-                val = a
-            if isinstance(val, list):
-                srcs = val
-            elif isinstance(val, str):
-                rel = val
-            elif isinstance(val, int) and not isinstance(val, bool):
-                ints.append(val)
-            elif val is not None:
-                raise ValueError(
-                    "algo.randomWalk: args are a source-id list, an "
-                    "optional relation type, an optional int length "
-                    "and an optional int seed")
-        if (not srcs or not isinstance(srcs, list)
-                or not all(isinstance(s, int) and not isinstance(s, bool)
-                           for s in srcs)):
-            raise ValueError(
-                "algo.randomWalk requires a non-empty source-node id "
-                "list")
-        length = ints[0] if ints else 5
-        seed = ints[1] if len(ints) > 1 else 7
-        if length < 1:
-            raise ValueError("algo.randomWalk length must be >= 1")
-        walks = random_walks(
-            g.edges([rel] if rel else None).select("_src", "_dst"),
-            srcs, length=length, seed=seed)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = walks.join(nodes, walks["node"] == nodes["_id"]) \
-            .select("walk", "step", node_struct.alias("node"))
-        return out, ["walk", "step", "node"]
     if name == "algo.betweenness":
         # additive: Brandes betweenness on a label-set-induced subgraph
         # (exact when no source list is given — right for bounded
@@ -453,17 +411,8 @@ def run_procedure(planner, clause: A.CallClause
         # pair counts).
         from redisgraph_spark.algorithms.centrality import (MAX_HOPS,
                                                             betweenness)
-
-        def _bv(e):
-            if isinstance(e, A.Literal):
-                return e.value
-            if isinstance(e, A.ListLiteral):
-                return [_bv(x) for x in e.items]
-            if isinstance(e, A.Parameter):
-                return planner.params[e.name]
-            raise ValueError("algo.betweenness args must be literals")
-
-        vals = [_bv(a) for a in clause.args]
+        vals = [arg_value(planner, a, "algo.betweenness arguments")
+                for a in clause.args]
         label = vals[0] if vals else None
         rel = vals[1] if len(vals) > 1 else None
         srcs = None
@@ -501,11 +450,8 @@ def run_procedure(planner, clause: A.CallClause
                            "_dst", "left_semi")
         bc = betweenness(edges, source_ids=srcs, max_hops=hops,
                          directed=directed)
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = nodes.join(bc.withColumnRenamed("node", "__bcid"),
-                         nodes["_id"] == F.col("__bcid"), "left") \
-            .select(node_struct.alias("node"),
-                    F.coalesce("score", F.lit(0.0)).alias("score"))
+        out = yield_nodes(bc, nodes, how="right") \
+            .select("node", F.coalesce("score", F.lit(0.0)).alias("score"))
         return out, ["node", "score"]
     if name == "algo.hits":
         # additive: Kleinberg hubs & authorities, fixed synchronous
@@ -529,54 +475,11 @@ def run_procedure(planner, clause: A.CallClause
             raise ValueError("algo.HITS iteration count must be >= 1")
         sc = hits(g.edges([rel] if rel else None).select("_src", "_dst"),
                   iters=iters)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = sc.withColumnRenamed("node", "__h_id") \
-            .join(nodes, F.col("__h_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "hub", "authority")
-        return out, ["node", "hub", "authority"]
-    if name == "algo.sssp":
-        # additive: bounded-hop weighted single-source shortest paths
-        # (Bellman-Ford frontier relaxation). args: source node id,
-        # optional relation-type string or NULL (default all edges),
-        # optional weight-property string or NULL (default weight 1.0),
-        # optional int max hop count.
-        from redisgraph_spark.algorithms.sssp import MAX_HOPS, sssp
-        args = []
-        for a in clause.args:
-            if isinstance(a, A.Literal):
-                args.append(a.value)
-            elif isinstance(a, A.Parameter):
-                args.append(planner.params[a.name])
-            else:
-                raise ValueError(
-                    "algo.sssp arguments must be literals or parameters "
-                    "(a bound source goes through id(n) per-record CALL)")
-        if not args or not isinstance(args[0], int):
-            raise ValueError("algo.sssp requires an integer source id")
-        source = args[0]
-        rel = args[1] if len(args) > 1 else None
-        weight = args[2] if len(args) > 2 else None
-        hops = args[3] if len(args) > 3 else MAX_HOPS
-        if rel is not None and not isinstance(rel, str):
-            raise ValueError("algo.sssp reltype must be a string or NULL")
-        if weight is not None and not isinstance(weight, str):
-            raise ValueError(
-                "algo.sssp weight property must be a string or NULL")
-        if not isinstance(hops, int) or hops < 1:
-            raise ValueError("algo.sssp max hops must be a positive int")
-        edges = g.edges([rel] if rel else None)
-        if weight is not None and weight not in edges.columns:
-            raise ValueError(
-                f"algo.sssp: no edge property {weight!r} on the "
-                "selected relation(s)")
-        dist = sssp(edges, source, weight, max_hops=hops)
-        nodes = g.nodes()
-        node_struct = F.struct(*[F.col(c) for c in nodes.columns])
-        out = dist.withColumnRenamed("node", "__ss_id") \
-            .join(nodes, F.col("__ss_id") == nodes["_id"]) \
-            .select(node_struct.alias("node"), "distance", "hops")
-        return out, ["node", "distance", "hops"]
+        return yield_nodes(sc, g.nodes()), ["node", "hub", "authority"]
+    if name in ("algo.sssp", "algo.closeness", "algo.randomwalk"):
+        # literal/parameter sources: the correlated CALL's execution
+        # path on an inline roots frame
+        return per_source_call(planner, None, clause)
     if name == "algo.bfs":
         # handled as a correlated call in CypherPlanner._clause_call
         # (needs the bound source variable); reaching here means no ctx

@@ -1954,74 +1954,24 @@ class CypherPlanner:
     # ------------------------------------------------------------------ CALL
     def _clause_call(self, ctx: Ctx, clause: A.CallClause,
                      standalone: bool = True) -> None:
-        from redisgraph_spark.functions.procedures import run_procedure
-        if clause.proc == "algo.bfs":
+        from redisgraph_spark.functions.procedures import (
+            PER_SOURCE, per_source_call, run_procedure)
+        src = clause.args[0] if clause.args else None
+        if clause.proc == "algo.bfs" or (
+                clause.proc in PER_SOURCE and ctx.df is not None
+                and isinstance(src, A.Variable)
+                and ctx.vars.get(src.name) is not None
+                and ctx.vars[src.name].kind == "node"):
             # correlated procedure: consumes the bound source variable per
             # input record (ProcedureCall `ops/op_procedure_call.c` runs
-            # per-record; our plan is one multi-source BFS join)
-            from redisgraph_spark.algorithms.bfs import bfs_call
-            proc_df, default_cols = bfs_call(self, ctx, clause)
+            # per-record; our plan is ONE root-keyed multi-source job —
+            # never a driver loop)
+            proc_df, default_cols = per_source_call(self, ctx, clause)
             sel = clause.yields or [(c, None) for c in default_cols]
             for col_name, alias in sel:
                 if col_name not in default_cols:
                     raise PlanError(
                         f"Procedure {clause.proc} has no column {col_name}")
-                name = alias or col_name
-                if name != col_name:
-                    proc_df = proc_df.withColumnRenamed(col_name, name)
-                ctx.vars[name] = VarInfo("scalar")
-            drop = [c for c in default_cols
-                    if c not in {a or c for c, a in sel}]
-            ctx.df = proc_df.drop(*drop) if drop else proc_df
-            if clause.where is not None:
-                self._apply_where(ctx, clause.where)
-            return
-        if clause.proc == "algo.sssp" and ctx.df is not None \
-                and clause.args and isinstance(clause.args[0], A.Variable) \
-                and ctx.vars.get(clause.args[0].name) is not None \
-                and ctx.vars[clause.args[0].name].kind == "node":
-            # correlated SSSP: per-row sources become ONE keyed
-            # multi-source Bellman-Ford (never a driver loop — the
-            # same vectorized shape as algo.BFS above)
-            from redisgraph_spark.algorithms.sssp import sssp_call
-            proc_df, default_cols = sssp_call(self, ctx, clause)
-            sel = clause.yields or [(c, None) for c in default_cols]
-            for col_name, alias in sel:
-                if col_name not in default_cols:
-                    raise PlanError(
-                        f"Procedure {clause.proc} has no column "
-                        f"{col_name}")
-                name = alias or col_name
-                if name != col_name:
-                    proc_df = proc_df.withColumnRenamed(col_name, name)
-                ctx.vars[name] = VarInfo("scalar")
-            drop = [c for c in default_cols
-                    if c not in {a or c for c, a in sel}]
-            ctx.df = proc_df.drop(*drop) if drop else proc_df
-            if clause.where is not None:
-                self._apply_where(ctx, clause.where)
-            return
-        if clause.proc in ("algo.closeness", "algo.randomwalk") \
-                and ctx.df is not None and clause.args \
-                and isinstance(clause.args[0], A.Variable) \
-                and ctx.vars.get(clause.args[0].name) is not None \
-                and ctx.vars[clause.args[0].name].kind == "node":
-            # correlated closeness / randomWalk: per-row node sources
-            # feed ONE root-keyed multi-source job (the algo.BFS /
-            # algo.SSSP vectorized shape — never a driver loop)
-            if clause.proc == "algo.closeness":
-                from redisgraph_spark.algorithms.centrality import \
-                    closeness_call
-                proc_df, default_cols = closeness_call(self, ctx, clause)
-            else:
-                from redisgraph_spark.algorithms.walks import walks_call
-                proc_df, default_cols = walks_call(self, ctx, clause)
-            sel = clause.yields or [(c, None) for c in default_cols]
-            for col_name, alias in sel:
-                if col_name not in default_cols:
-                    raise PlanError(
-                        f"Procedure {clause.proc} has no column "
-                        f"{col_name}")
                 name = alias or col_name
                 if name != col_name:
                     proc_df = proc_df.withColumnRenamed(col_name, name)

@@ -8,6 +8,32 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+@pytest.hookimpl(tryfirst=True)
+def pytest_collection_modifyitems(config, items):
+    """Run tests named by node id on the command line even when marked
+    ``slow``: pytest.ini's default ``-m "not slow"`` would otherwise
+    deselect them, so ``pytest tests/f.py::test_x`` ran nothing. Files
+    and directories keep the default selection. Runs before the mark
+    filter and drops the ``slow`` marker from the named items."""
+    named = []
+    for arg in config.args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        full = (config.invocation_params.dir / path).resolve()
+        try:
+            rel = full.relative_to(config.rootpath).as_posix()
+        except ValueError:
+            continue
+        named.append(f"{rel}::{rest}")
+    for item in items:
+        if any(item.nodeid == n or item.nodeid.startswith((n + "[",
+                                                           n + "::"))
+               for n in named):
+            item.own_markers = [m for m in item.own_markers
+                                if m.name != "slow"]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from redisgraph_spark import get_spark

@@ -1,10 +1,12 @@
-"""Property tests for the round-7 graph algorithms: each checks the
-DataFrame implementation against a brute-force pure-Python reference
-on seeded random graphs — the differential style of
-test_expr_differential / test_mutation_differential applied to the
-algorithm layer."""
+"""Property tests for the graph algorithms: each checks the DataFrame
+implementation against a brute-force pure-Python reference on seeded
+random graphs — the differential style of test_expr_differential /
+test_mutation_differential applied to the algorithm layer — plus the
+contract of the shared superstep loop (halting, convergence reporting,
+one lineage cut per superstep)."""
 
 import random
+import warnings
 
 import pytest
 
@@ -52,7 +54,7 @@ def test_sssp_matches_bellman_ford_reference(spark, seed):
     """Distances and hop counts equal a pure-Python Bellman-Ford over
     paths of ≤ max_hops edges (weights drawn from small ints so float
     sums are exact)."""
-    from redisgraph_spark.algorithms.sssp import sssp
+    from redisgraph_spark.algorithms.sssp import sssp_multi
     rng = random.Random(seed)
     pairs = [(a, b) for a, b in _random_edges(seed, n=12, m=30)
              if a != b]
@@ -61,8 +63,10 @@ def test_sssp_matches_bellman_ford_reference(spark, seed):
         [(i, a, b, w[(a, b)]) for i, (a, b) in enumerate(pairs)],
         ["_id", "_src", "_dst", "wt"])
     hops = 4
+    roots = spark.createDataFrame([(1,)], "__root long")
     got = {r["node"]: (r["distance"], r["hops"])
-           for r in sssp(edges, 1, "wt", max_hops=hops).collect()}
+           for r in sssp_multi(edges, roots, "wt",
+                               max_hops=hops).collect()}
 
     best = {1: (0.0, 0)}
     frontier = {1: (0.0, 0)}
@@ -251,3 +255,135 @@ def test_random_walks_match_python_replay(spark, seed):
             cur = out[h % len(out)]
             exp.append(cur)
         assert [got[s][t] for t in sorted(got[s])] == exp, (s, got[s], exp)
+
+
+# ------------------------------------------------------ superstep loop
+
+@pytest.fixture()
+def cut_count(monkeypatch):
+    """Counts ``localCheckpoint`` calls (the classic DataFrame class
+    overrides the base method, so it is the one patched)."""
+    import pyspark.sql.classic.dataframe as classic_df
+    calls = []
+    orig = classic_df.DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return orig(self, *args, **kwargs)
+    monkeypatch.setattr(classic_df.DataFrame, "localCheckpoint", counting)
+    return calls
+
+
+def _levels(spark, n):
+    """State (v, lvl) of a BFS over the chain 0→1→…→n-1 from 0."""
+    from pyspark.sql import functions as F
+    chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                  "a long, b long")
+
+    def step(state, rnd):
+        nxt = state.filter(F.col("lvl") == rnd - 1) \
+            .join(chain, F.col("v") == chain["a"]) \
+            .select(F.col("b").alias("v"), F.lit(rnd).alias("lvl"))
+        return state.unionByName(nxt)
+    return spark.createDataFrame([(0, 0)], "v long, lvl int"), step
+
+
+def test_superstep_halts_on_empty_frontier(spark):
+    from pyspark.sql import functions as F
+    from redisgraph_spark.algorithms import superstep
+    state, step = _levels(spark, 4)
+    res = superstep.run(state, step, 10, superstep.frontier_empty(
+        lambda s, rnd: s.filter(F.col("lvl") == rnd)))
+    # levels 1..3 are reached; round 4 finds nothing new
+    assert res.converged and res.rounds == 4
+    assert sorted(tuple(r) for r in res.state.collect()) == \
+        [(0, 0), (1, 1), (2, 2), (3, 3)]
+
+
+def test_superstep_halts_at_fixpoint(spark):
+    from pyspark.sql import functions as F
+    from redisgraph_spark.algorithms import superstep
+    state = spark.createDataFrame([(i, 10 - i) for i in range(4)],
+                                  "k long, v long")
+
+    def step(s, _rnd):   # v decreases by one per round, floored at 7
+        return s.select("k", F.greatest(F.col("v") - 1, F.lit(7))
+                        .alias("v"))
+    res = superstep.run(state, step, 20,
+                        superstep.unchanged(F.sum("v")))
+    # round 3 reaches all-7s; round 4 repeats the sum and halts
+    assert res.converged and res.rounds == 4
+    assert {r["v"] for r in res.state.collect()} == {7}
+
+
+def test_superstep_cap_reports_not_converged_and_warns_once(spark):
+    from pyspark.sql import functions as F
+    from redisgraph_spark.algorithms import superstep
+    state, step = _levels(spark, 10)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        res = superstep.run(state, step, 3, superstep.frontier_empty(
+            lambda s, rnd: s.filter(F.col("lvl") == rnd)))
+        superstep.warn_capped(res, "chain walk", "raise the cap")
+    assert not res.converged and res.rounds == 3
+    assert res.state.count() == 4
+    runtime = [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert len(runtime) == 1 and "chain walk" in str(runtime[0].message)
+
+
+def test_superstep_one_cut_per_round(spark, cut_count):
+    from pyspark.sql import functions as F
+    from redisgraph_spark.algorithms import superstep
+    from redisgraph_spark.algorithms.components import label_propagation
+    state, step = _levels(spark, 10)
+    superstep.run(state, step, 5)
+    assert len(cut_count) == 5
+    cut_count.clear()
+    superstep.run(state, step, 20, superstep.frontier_empty(
+        lambda s, rnd: s.filter(F.col("lvl") == rnd)))
+    assert len(cut_count) == 10   # 9 levels + the empty round
+    cut_count.clear()
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 5)],
+                                  "_src long, _dst long")
+    ids = spark.createDataFrame([(i,) for i in range(1, 6)], "_id long")
+    label_propagation(ids, edges, iters=3).collect()
+    assert len(cut_count) == 3
+
+
+def test_kcore_reports_cap_on_long_path(spark):
+    """Peeling a path to its (empty) 2-core takes one round per two
+    nodes: a 200-node path needs 100 rounds. Under the default cap of
+    64 the call must warn instead of silently returning 72 nodes that
+    are not a 2-core; with room to converge the core is empty."""
+    from redisgraph_spark.algorithms.components import k_core
+    edges = spark.createDataFrame([(i, i + 1) for i in range(199)],
+                                  "_src long, _dst long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        capped = k_core(edges, 2).count()
+    assert capped > 0
+    assert [w for w in caught if issubclass(w.category, RuntimeWarning)
+            and "k_core" in str(w.message)]
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert k_core(edges, 2, max_iter=128).count() == 0
+    assert not [w for w in caught
+                if issubclass(w.category, RuntimeWarning)]
+
+
+def test_pagerank_uniform_equals_all_node_restart(spark):
+    """Uniform PageRank is the restart-vector form with r = 1/n; naming
+    every node as the restart set must give the same scores."""
+    from redisgraph_spark.algorithms.pagerank import pagerank
+    pairs = [(a, b) for a, b in _random_edges(9, n=15, m=40) if a != b]
+    ids = sorted({v for p in pairs for v in p} | {99})   # 99 dangles
+    nodes = spark.createDataFrame([(i,) for i in ids], "_id long")
+    edges = spark.createDataFrame(pairs, "_src long, _dst long")
+    uni = {r["_id"]: r["score"]
+           for r in pagerank(nodes, edges, iterations=15).collect()}
+    ppr = {r["_id"]: r["score"]
+           for r in pagerank(nodes, edges, iterations=15,
+                             restart_ids=ids).collect()}
+    assert set(uni) == set(ppr) == set(ids)
+    for i in ids:
+        assert abs(uni[i] - ppr[i]) < 1e-12, (i, uni[i], ppr[i])

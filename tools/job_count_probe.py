@@ -6,7 +6,11 @@ jobs x floor + data time. Job COUNTS are load-independent, which makes
 this probe valid even on a busy box. For each named entry it runs the
 query once cold, then once warm (fresh plan, .toPandas() like the
 bench) inside a job group and reports how many jobs the warm run
-scheduled.
+scheduled. Next to the job counts it reports how many lineage cuts
+(``DataFrame.localCheckpoint`` / ``checkpoint`` calls) each entry made,
+counted as ``perfbench/spans.py`` spans around those methods.
+Iterative algorithms run while the plan is built, so their jobs and
+cuts land in the cold pass; a warm or steady pass hits the plan cache.
 
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/job_count_probe.py \
@@ -24,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from perfbench.spans import Tracer  # noqa: E402
 from redisgraph_spark import get_spark  # noqa: E402
 
 
@@ -44,11 +49,21 @@ def main() -> None:
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    import pyspark.sql.classic.dataframe as classic_df
+    # the classic class overrides both methods, so it is the one wrapped
+    tracer = Tracer()
+    tracer.install([(classic_df.DataFrame, attr, "algorithms.checkpoint")
+                    for attr in ("localCheckpoint", "checkpoint")])
     out = {}
     for name in names:
         fn = qs[name]
+        first = len(tracer.spans)
         # cold pass (plan cache fill, codegen, JIT)
+        group = f"jcpc-{name}"
+        sc.setJobGroup(group, name)
         fn(spark, sf_dir).toPandas()
+        sc.setJobGroup(None, None)
+        cjobs = len(tracker.getJobIdsForGroup(group))
         # bench-warm pass: fresh physical plan (no broadcast/shuffle
         # reuse), prep outside the count, then count jobs of toPandas
         df = fn(spark, sf_dir)
@@ -69,11 +84,15 @@ def main() -> None:
         swall = time.time() - t0
         sc.setJobGroup(None, None)
         sjobs = len(tracker.getJobIdsForGroup(group))
-        out[name] = {"warm_jobs": wjobs, "warm_s": round(wwall, 3),
-                     "steady_jobs": sjobs, "steady_s": round(swall, 3)}
-        print(f"{name:24s} warm_jobs={wjobs:3d} warm={wwall:6.3f}s  "
-              f"steady_jobs={sjobs:3d} steady={swall:6.3f}s",
+        cuts = len(tracer.spans) - first
+        out[name] = {"cold_jobs": cjobs, "warm_jobs": wjobs,
+                     "warm_s": round(wwall, 3), "steady_jobs": sjobs,
+                     "steady_s": round(swall, 3), "checkpoints": cuts}
+        print(f"{name:24s} cold_jobs={cjobs:3d} warm_jobs={wjobs:3d} "
+              f"warm={wwall:6.3f}s  steady_jobs={sjobs:3d} "
+              f"steady={swall:6.3f}s  checkpoints={cuts:3d}",
               flush=True)
+    tracer.uninstall()
     print(json.dumps(out))
 
 
