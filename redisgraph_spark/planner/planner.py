@@ -77,6 +77,14 @@ class Ctx:
     vl_bind: tuple | None = None
 
 
+def _leaves(dt) -> int:
+    """Leaf (non-struct) field count of a data type."""
+    fields = getattr(dt, "fields", None)
+    if fields is None:
+        return 1
+    return sum(_leaves(f.dataType) for f in fields)
+
+
 def _walk(e):
     """Yield every AST node under `e` (incl. itself)."""
     yield e
@@ -279,6 +287,19 @@ class CypherPlanner:
         if getattr(self.graph, "_small_input", False):
             return F.broadcast(df)
         return df
+
+    def _hint_bounded(self, df: DataFrame | None,
+                      bound: int | None) -> DataFrame | None:
+        """``_hint_small`` for a subplan of at most ``bound`` rows
+        (from statistics; None = unknown, no hint): hint only when its
+        hash relation — ~12 bytes per leaf value per row, unpruned —
+        fits the 64 MB broadcast budget."""
+        if bound is None or df is None \
+                or not getattr(self.graph, "_small_input", False):
+            return df
+        if bound * 12 * _leaves(df.schema) > 64 * 1024 * 1024:
+            return df
+        return F.broadcast(df)
 
     def compiler(self, ctx: Ctx) -> ExprCompiler:
         df = ctx.df if ctx.df is not None else self._unit_df()
@@ -746,6 +767,9 @@ class CypherPlanner:
         within-clause conflicts."""
         kinds = {} if optional else \
             {n: v.kind for n, v in ctx.vars.items()}
+        # variables an earlier clause bound (`ctx.clause_bound` of the
+        # binders; an OPTIONAL MATCH sub-context starts empty)
+        outer = frozenset(kinds)
         for path in paths:
             for el in path.elements:
                 var = getattr(el, "var", None)
@@ -759,11 +783,18 @@ class CypherPlanner:
                         if kinds.setdefault(var, "edge") != "edge":
                             raise PlanError(
                                 f"Variable `{var}` is not an edge")
-                    else:
-                        # var-len var binds a hop list: the binder
-                        # (`_var_len_hop`) overwrites the kind to
-                        # "scalar" without a check — mirror exactly
+                    elif var not in kinds:
+                        # a var-len var binds a hop list
                         kinds[var] = "scalar"
+                    elif var not in outer:
+                        # `_var_len_hop`: same-clause reuse
+                        raise PlanError(
+                            f"Variable `{var}` already declared")
+                    elif kinds[var] in ("node", "edge"):
+                        raise PlanError(f"Variable `{var}` is not a "
+                                        "relationship list")
+                    # else `_var_len_hop` matches the earlier clause's
+                    # list under a fresh name, which keeps its kind
 
     def _clause_match(self, ctx: Ctx, clause: A.MatchClause) -> None:
         self._check_pattern_kinds(ctx, clause.paths, clause.optional)
@@ -1184,15 +1215,28 @@ class CypherPlanner:
             prev: tuple[str, str | None] = ("free", None)
         else:
             prev = ("var", self._bind_node(ctx, first))
-        # statistics-tracked frontier row bound along this chain, for
-        # small-mode build-side hints (Catalyst cannot size a join
-        # OUTPUT statically, so left-deep hop joins otherwise broadcast
-        # the big new edge table instead of the small accumulated
-        # frontier). Exact after the first hop off a unique scan;
-        # accumulated additively after — an overestimate only makes the
-        # hint rarer. Reset on anything untrackable.
+        # Frontier build sides for small-input mode: Catalyst cannot
+        # size a join OUTPUT statically, so left-deep hop joins would
+        # otherwise broadcast the big new edge or node table instead of
+        # the small accumulated frontier. `chain_bound` is the
+        # frontier's row count from statistics along a chain that
+        # starts fresh: the start label's count at the scan (a filter
+        # only lowers it), plus |E| per fixed hop. After one directed
+        # hop off the scan it is still a true bound (each row uses a
+        # distinct edge); after more hops, or an undirected one, paths
+        # can multiply past it, so there it is an estimate. A var-len
+        # hop or an unknown count drops it. A chain is ANCHORED when
+        # its first node carries an inline property map (the reference
+        # starts traversal at filtered nodes, traverse_order.c): every
+        # hop then builds both its joins — edge table, then target
+        # node table — from the frontier. An unanchored chain builds
+        # only the edge join of its first two hops from the frontier,
+        # and only while the frontier's bound is at most half the edge
+        # count. `_hint_bounded` keeps either within the broadcast
+        # budget and gives no hint at cluster scale.
+        anchored = fresh_start and bool(first.props)
         chain_bound: int | None = None
-        if fresh_start and not first.props:
+        if fresh_start:
             if prev[0] == "free":
                 chain_bound = 0
             else:
@@ -1232,30 +1276,18 @@ class CypherPlanner:
                 prev = self._var_len_hop(ctx, prev, rel, node, edge_uniq,
                                          skippable)
             else:
-                if chain_bound is not None and chain_hops < 2 \
-                        and getattr(self.graph, "_small_input", False):
-                    E = self._stat_peek(
-                        "e", list(rel.types) if rel.types else None)
-                    def _leaves(dt) -> int:
-                        fields = getattr(dt, "fields", None)
-                        if fields is None:
-                            return 1
-                        return sum(_leaves(f.dataType) for f in fields)
-                    if E is not None and ctx.df is not None \
-                            and chain_bound * 2 <= E \
-                            and chain_bound * 12 * _leaves(ctx.df.schema) \
-                            <= 64 * 1024 * 1024:
-                        # frontier provably smaller than the edge table
-                        # it is about to meet (and its hash relation
-                        # fits the broadcast budget even unpruned):
-                        # make IT the build side
-                        ctx.df = F.broadcast(ctx.df)
-                    chain_bound = None if E is None else chain_bound + E
-                else:
-                    chain_bound = None
+                E = None if chain_bound is None else self._stat_peek(
+                    "e", list(rel.types) if rel.types else None)
+                frontier: tuple[int | None, int | None] = (None, None)
+                if E is not None:
+                    if anchored:
+                        frontier = (chain_bound, chain_bound + E)
+                    elif chain_hops < 2 and chain_bound * 2 <= E:
+                        frontier = (chain_bound, None)
+                chain_bound = None if E is None else chain_bound + E
                 chain_hops += 1
                 prev = self._single_hop(ctx, prev, rel, node, edge_uniq,
-                                        skippable or id_only)
+                                        skippable or id_only, frontier)
                 if id_only and prev[0] == "col":
                     ctx.df = ctx.df.withColumn(
                         node.var,
@@ -1448,7 +1480,13 @@ class CypherPlanner:
     def _single_hop(self, ctx: Ctx, prev: tuple[str, str | None],
                     rel: A.RelPattern, node: A.NodePattern,
                     edge_uniq: list[str],
-                    skippable: bool = False) -> tuple[str, str | None]:
+                    skippable: bool = False,
+                    frontier: tuple[int | None, int | None] = (None, None)
+                    ) -> tuple[str, str | None]:
+        """One fixed-length hop. ``frontier`` holds row bounds of the
+        accumulated frontier at the edge join and at the target-node
+        join; a bound makes the frontier that join's build side
+        (``_hint_bounded``)."""
         e_name = rel.var or self.sym("e")
         left_var = prev[1] if prev[0] == "var" else None
 
@@ -1483,6 +1521,7 @@ class CypherPlanner:
         e_sel = oriented.select(
             F.struct(*[F.col(c) for c in base_cols]).alias(e_name),
             F.col(from_c), F.col(to_c))
+        ctx.df = self._hint_bounded(ctx.df, frontier[0])
         if prev[0] == "free":
             ctx.df = e_sel if ctx.df is None else ctx.df.crossJoin(e_sel)
             ctx.df = ctx.df.drop(from_c)
@@ -1571,6 +1610,7 @@ class CypherPlanner:
         n_sel = flat.select(
             F.struct(*[F.col(c) for c in flat.columns]).alias(tgt),
             F.col("_id").alias(nid))
+        ctx.df = self._hint_bounded(ctx.df, frontier[1])
         ctx.df = ctx.df.join(n_sel, F.col(to_c) == F.col(nid), "inner") \
                        .drop(to_c, nid)
         ctx.vars[tgt] = VarInfo("node", nprops)
@@ -1599,6 +1639,9 @@ class CypherPlanner:
                 # VariableAlreadyBound
                 raise PlanError(
                     f"Variable `{rel.var}` already declared")
+            if ctx.vars[rel.var].kind in ("node", "edge"):
+                raise PlanError(f"Variable `{rel.var}` is not a "
+                                "relationship list")
             # deprecated openCypher form: a bound relationship LIST in
             # var-len position constrains the matched edge list to it
             import dataclasses
@@ -1832,14 +1875,7 @@ class CypherPlanner:
         elif len(rels) == 1 and rels[0].min_hops is None:
             bound = self._stat_peek(
                 "e", list(rels[0].types) if rels[0].types else None)
-        if bound is not None:
-            def _leaves(dt) -> int:
-                fields = getattr(dt, "fields", None)
-                if fields is None:
-                    return 1
-                return sum(_leaves(f.dataType) for f in fields)
-            if bound * 12 * _leaves(sub_df.schema) <= 64 * 1024 * 1024:
-                sub_df = self._hint_small(sub_df)
+        sub_df = self._hint_bounded(sub_df, bound)
         ctx.df = ctx.df.join(sub_df, cond, "left").drop(*renames.values())
         if "__unit" in ctx.df.columns:
             ctx.df = ctx.df.drop("__unit")

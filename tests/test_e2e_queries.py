@@ -158,6 +158,45 @@ class TestTpch:
             "RETURN relationshipType").collect()}
         assert "PLACED" in rels and "CONTAINS" in rels
 
+    # anchored chains (inline map on the first node) build their hash
+    # tables from the frontier; each must match its WHERE form
+    @pytest.mark.parametrize("pattern,ret,where,k", [
+        # 1 hop
+        ("(c:Customer {c_custkey: $k})-[:PLACED]->(o:Order)",
+         "o.o_orderkey, o.o_totalprice", "c.c_custkey = $k", 7),
+        # 2 hops, the middle node skipped (no node-table join)
+        ("(c:Customer {c_custkey: $k})-[:PLACED]->()-[l:CONTAINS]->"
+         "(p:Part)", "p.p_partkey, l.l_quantity", "c.c_custkey = $k", 7),
+        # undirected hop
+        ("(c:Customer {c_custkey: $k})-[:PLACED]-(o)",
+         "o.o_orderkey", "c.c_custkey = $k", 7),
+        # named edge variable
+        ("(c:Customer {c_custkey: $k})-[r:PLACED]->(o:Order)",
+         "id(r), type(r), o.o_orderkey", "c.c_custkey = $k", 7),
+        # an anchor that matches no node
+        ("(c:Customer {c_custkey: $k})-[:PLACED]->(o:Order)",
+         "o.o_orderkey", "c.c_custkey = $k", -1),
+        # a non-unique anchor
+        ("(c:Customer {c_mktsegment: 'BUILDING'})-[:PLACED]->(o:Order)"
+         "-[l:CONTAINS]->(p:Part)",
+         "c.c_custkey, o.o_orderkey, p.p_partkey",
+         "c.c_mktsegment = 'BUILDING'", 7),
+        # a second path in the same MATCH starting at the anchor
+        ("(c:Customer {c_custkey: $k})-[:PLACED]->(o:Order), "
+         "(c)-[:IN_NATION]->(n:Nation)",
+         "o.o_orderkey, n.n_name", "c.c_custkey = $k", 7),
+    ])
+    def test_anchored_chain_matches_where_form(self, graph, pattern, ret,
+                                               where, k):
+        inline = rows(graph.query(
+            f"MATCH {pattern} RETURN {ret}", {"k": k}))
+        plain = pattern.replace(" {c_custkey: $k}", "") \
+            .replace(" {c_mktsegment: 'BUILDING'}", "")
+        filtered = rows(graph.query(
+            f"MATCH {plain} WHERE {where} RETURN {ret}", {"k": k}))
+        assert inline == filtered
+        assert bool(inline) == (k != -1)
+
 
 class TestImdb:
     """The reference's imdb demo shapes (demo/imdb/imdb_utils.py,

@@ -45,6 +45,29 @@ def test_edge_variable_reuse_rejected(social):
             "MATCH (a)-[e:friend]->(b)-[e:friend]->(c) RETURN a")
 
 
+def test_var_len_reuse_raises_binder_error(social, monkeypatch):
+    """The kind pre-pass raises what the binder (`_var_len_hop`)
+    raises: a var-len variable reused in the same clause is already
+    declared; one bound by an earlier clause is matched under a fresh
+    name and keeps its kind, so the later `(n)` is no kind conflict —
+    the error is that a node is not a relationship list."""
+    from redisgraph_spark.planner.planner import CypherPlanner
+    queries = {"MATCH (n)-[n*1..1]->() RETURN n": "already declared",
+               "MATCH (n) MATCH ()-[n*1..1]->(n) RETURN n":
+               "is not a relationship list"}
+    checked = {}
+    for q, msg in queries.items():
+        with pytest.raises(PlanError, match=msg) as exc:
+            social.query(q)
+        checked[q] = str(exc.value)
+    monkeypatch.setattr(CypherPlanner, "_check_pattern_kinds",
+                        lambda *a, **k: None)
+    for q in queries:
+        with pytest.raises(PlanError) as exc:
+            social.query(q)
+        assert str(exc.value) == checked[q]
+
+
 def test_union_column_mismatch(social):
     with pytest.raises(PlanError, match="same columns"):
         social.query("MATCH (a:person) RETURN a.name AS x "

@@ -13,7 +13,10 @@ de-optimize (round-9 verdict #6):
   - no graph query evaluates Python per row (BatchEvalPython /
     ArrowEvalPython);
   - through the cluster-scale path (gate open), the scan-level filter
-    reaches the parquet reader as PushedFilters.
+    reaches the parquet reader as PushedFilters;
+  - an anchored chain (inline property map on its first node) builds
+    every broadcast hash table from the filtered frontier, never from
+    a whole label or edge table.
 """
 
 import os
@@ -74,6 +77,92 @@ def test_no_per_row_python_in_graph_queries(entry_queries, name):
     p = _executed(qs, spark, name)
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p
+
+
+ANCHORED = {
+    "hop1": ("(c:Customer {c_custkey: $k})-[:PLACED]->(o:Order)",
+             "o.o_orderkey AS ok ORDER BY ok"),
+    "hop2": ("(c:Customer {c_custkey: $k})-[:PLACED]->(o:Order)"
+             "-[l:CONTAINS]->(p:Part)",
+             "p.p_brand AS brand, sum(l.l_quantity) AS qty ORDER BY brand"),
+}
+
+
+def _broadcasts(plan):
+    """(rows, subtree text) of each BroadcastExchange of an executed
+    (JVM) plan that has run; an adaptive plan is read in its final
+    form (an earlier graph may have left the session adaptive)."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if kind == "BroadcastExchangeExec":
+            rows = node.metrics().apply("numOutputRows").value()
+            out.append((rows, node.toString()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(ANCHORED))
+def test_anchored_chain_builds_from_frontier(entry_queries, name,
+                                             monkeypatch):
+    """Small-input mode: every broadcast hash table of an anchored
+    chain holds the anchor-filtered frontier — the c_custkey filter is
+    in its subtree (a tiny Customer table is folded into a
+    LocalTableScan of the matching rows instead), and it holds at most
+    as many rows as the pattern has matches — never the whole
+    Order/CONTAINS/Part table. The one exception is a join whose
+    frontier bound failed the hash budget (hop2's Part join from sf0.1
+    up): it keeps the unhinted plan. With the gate open the same query
+    carries no frontier hint."""
+    import __spark_entry__ as em
+    from redisgraph_spark.planner.planner import CypherPlanner
+    _, spark = entry_queries
+    g = em._graph(spark, SF)
+    assert g._small_input
+    pattern, ret = ANCHORED[name]
+    query = f"MATCH {pattern} RETURN {ret}"
+    matches = g.query(f"MATCH {pattern} RETURN count(*) AS n",
+                      {"k": 7}).collect()[0]["n"]
+    assert matches > 0
+    refused = []
+    hint = CypherPlanner._hint_bounded
+
+    def spy(self, df, bound):
+        out = hint(self, df, bound)
+        if bound is not None and out is df:
+            refused.append(bound)
+        return out
+
+    monkeypatch.setattr(CypherPlanner, "_hint_bounded", spy)
+    g._plan_cache.clear()
+    df = g.query(query, {"k": 7})
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    builds = _broadcasts(plan)
+    assert builds, plan.toString()
+    tables = [text for rows, text in builds if rows > matches or not (
+        "c_custkey" in text or "LocalTableScan" in text)]
+    assert len(tables) <= len(refused), "\n".join(tables)
+    if name == "hop1":
+        assert not refused
+    assert "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+    g._small_input = False
+    try:
+        g._plan_cache.clear()
+        gated = g.query(query, {"k": 7})
+        analyzed = gated._jdf.queryExecution().analyzed().toString()
+    finally:
+        g._small_input = True
+        g._plan_cache.clear()
+    assert "ResolvedHint" not in analyzed, analyzed
 
 
 def test_pushed_filters_reach_parquet_gate_open():
